@@ -83,8 +83,8 @@ _SAMPLE_FIRST = [
     "stream_first_seen_tws",
     "source_protobuf_roundtrip",
     # (3) re-certification backfill: the head of the r4-stale tier
-    #     (20 of 48; the remaining 28 queue post-boundary to lead the
-    #     next sample). 21 + 9 + 20 = 50 = the driver sample size.
+    #     (19 of 48; the remaining 29 queue post-boundary to lead the
+    #     next sample). 21 + 10 + 19 = 50 = the driver sample size.
     "arrow_window_zscore",
     "arrow_window_zscore_pandas",
     "asof_join_forward",

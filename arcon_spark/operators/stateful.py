@@ -230,8 +230,8 @@ def cogroup_activity_order_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             og = pd.DataFrame({"count": [], "sum": []})
         j = g.join(og, how="left", rsuffix="_o")
-        n_orders = j.iloc[:, 3].fillna(0).astype("int64")
-        cents = j.iloc[:, 4].fillna(0).astype("int64")
+        n_orders = j["count_o"].fillna(0).astype("int64")
+        cents = j["sum"].fillna(0).astype("int64")
         # span via explicit ns so the math matches the per-key form's
         # Timedelta.value // 1000 exactly, whatever pandas' native unit
         span_ns = (j["max"] - j["min"]).astype("timedelta64[ns]").astype("int64")

@@ -1368,7 +1368,7 @@ def stream_kafka_txn_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     once despite duplicates physically present on the log (reference
     contract: epoch-committed sink, kafka.rs + epoch barriers)."""
     from arcon_spark.io import load_table
-    from arcon_spark.streaming.tape import write_segments
+    from arcon_spark.streaming.tape import read_segments, write_segments
 
     parts = _KW_PARTS
     topic = "events"
@@ -1409,9 +1409,7 @@ def stream_kafka_txn_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
 
         def run() -> Exception | None:
             q = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(root)
+                read_segments(spark, root, ev.schema)
                 .writeStream.foreachBatch(sink)
                 .option("checkpointLocation", ck)
                 .trigger(availableNow=True)

@@ -26,11 +26,12 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from arcon_spark.io import load_table
 from arcon_spark.plans.compat import EVENTS_NORM, msum, sql_msum
 from arcon_spark.plans.registry import register
-from arcon_spark.streaming.tape import write_segments
+from arcon_spark.streaming.tape import drain, read_segments, write_segments
 
 _SENTINEL = "__sentinel__"
 
@@ -81,15 +82,34 @@ def _tape_split_ts(sf_dir: str, types: tuple[str, ...] | None = None) -> _dt.dat
 STREAM_STATE_PARTITIONS = 8
 
 
-def _with_stream_partitions(spark: SparkSession, run) :
-    """Run a streaming start→drain under STREAM_STATE_PARTITIONS,
-    restoring the session's batch shuffle parallelism afterwards."""
+def _drain(spark: SparkSession, writer: DataStreamWriter) -> StreamingQuery:
+    """`drain` the writer under STREAM_STATE_PARTITIONS, restoring the
+    session's batch shuffle parallelism afterwards."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
     try:
-        return run()
+        return drain(writer)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _drain_latest(spark: SparkSession, agg: DataFrame, keys: list[str]) -> DataFrame:
+    """Update-mode readout: drain `agg` with each batch's updated rows
+    appended to a batch_id-tagged history, then keep the latest row
+    per key — the current view, in `agg`'s columns."""
+    out = scratch_dir("arcon_update_") + "/history"
+
+    def fb(batch_df: DataFrame, eid: int) -> None:
+        batch_df.withColumn("batch_id", F.lit(eid)).write.mode("append").parquet(out)
+
+    _drain(spark, agg.writeStream.foreachBatch(fb).outputMode("update"))
+    w = Window.partitionBy(*keys).orderBy(F.col("batch_id").desc())
+    return (
+        spark.read.parquet(out)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(*agg.columns)
+    )
 
 
 _TAPE_CACHE: dict[tuple[str, int], str] = {}
@@ -133,23 +153,26 @@ def _streamed_events(spark: SparkSession, sf_dir: str, n_sentinels: int = 2) -> 
     runs a dozen streaming queries over the same events tape, and
     rebuilding it per query is pure setup overhead. Each query still
     gets its own readStream/checkpoint over the shared directory."""
-    import os
-    import shutil
-    import tempfile
-    import time
-
     from arcon_spark.io import ensure_session_confs
 
     ensure_session_confs(spark)
     ev_raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    cached = _TAPE_CACHE.get((sf_dir, n_sentinels))
-    if cached is not None:
-        src = (
-            spark.readStream.schema(ev_raw.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(cached)
-        )
-        return _ts_to_timestamp(src)
+    root = _TAPE_CACHE.get((sf_dir, n_sentinels))
+    if root is None:
+        root = _TAPE_CACHE[(sf_dir, n_sentinels)] = _sentinel_tape(sf_dir, n_sentinels)
+    src = (
+        spark.readStream.schema(ev_raw.schema)
+        .option("maxFilesPerTrigger", "2")
+        .parquet(root)
+    )
+    return _ts_to_timestamp(src)
+
+
+def _sentinel_tape(sf_dir: str, n_sentinels: int) -> str:
+    """Hard-copy events.parquet and write the sentinel files after it."""
+    import shutil
+    import time
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -195,13 +218,7 @@ def _streamed_events(spark: SparkSession, sf_dir: str, n_sentinels: int = 2) -> 
         f = os.path.join(root, f"{k:03d}.parquet")
         pq.write_table(tbl, f)
         os.utime(f, (base_t + k, base_t + k))
-    _TAPE_CACHE[(sf_dir, n_sentinels)] = root
-    src = (
-        spark.readStream.schema(ev_raw.schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(root)
-    )
-    return _ts_to_timestamp(src)
+    return root
 
 
 @register(
@@ -236,19 +253,7 @@ def stream_tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _run_to_memory(spark: SparkSession, df: DataFrame, prefix: str) -> DataFrame:
     name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-
-    def run():
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    _with_stream_partitions(spark, run)
+    _drain(spark, df.writeStream.format("memory").queryName(name).outputMode("append"))
     return spark.table(name)
 
 
@@ -342,11 +347,7 @@ def stream_stateful_first_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             return None
 
     root, schema = _split_flush_tape(spark, sf_dir)
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, schema)
     out = apply_operator(
         src,
         ["user_id"],
@@ -354,21 +355,7 @@ def stream_stateful_first_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id long, first_val double",
         ts_col=None,  # no timers needed; flush marker drives emission
     )
-    name = f"stream_first_{uuid.uuid4().hex[:8]}"
-
-    def run():
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    _with_stream_partitions(spark, run)
-    return spark.table(name)
+    return _run_to_memory(spark, out, "stream_first")
 
 
 # Bucket count for the first-seen MapState layout: enough buckets to
@@ -594,11 +581,7 @@ def stream_type_counts_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             pass
 
     root = write_segments([first_half, second_half, flush])
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     out = src.groupBy("user_id").transformWithStateInPandas(
         TypeCounts(),
         "user_id long, event_type string, n long",
@@ -704,11 +687,7 @@ def stream_last5_sum_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             pass
 
     root = write_segments([first_half, second_half, flush])
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     out = src.groupBy("user_id").transformWithStateInPandas(
         Last5(), "user_id long, last5_cents long", "Append", "None"
     )
@@ -805,12 +784,7 @@ def stream_absence_emit_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             pass
 
     root = write_segments([first_half, second_half, pusher])
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-        .withWatermark("ts", "0 seconds")
-    )
+    src = read_segments(spark, root, ev.schema).withWatermark("ts", "0 seconds")
     out = src.groupBy("user_id").transformWithStateInPandas(
         AbsenceEmit(), "user_id long, last_seen_us long", "Append", "EventTime"
     )
@@ -890,9 +864,6 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     band_hash; signature computation is the batch-parameterized twin
     of the batch pipeline (shingles_of → signatures_of_shingles →
     lsh_bands_of), so both paths share one implementation."""
-    import os
-    import tempfile
-
     from arcon_spark.functions.dedup import (
         lsh_bands_of,
         shingles_of,
@@ -978,21 +949,9 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
             shutil.rmtree(old_dir, ignore_errors=True)
 
-    src = spark.readStream.schema("doc_id long, text string").option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(root)
-
-    def run():
-        q = (
-            src.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    _with_stream_partitions(spark, run)
+    src = read_segments(spark, root, "doc_id long, text string")
+    ckpt = os.path.join(work, "ckpt")
+    _drain(spark, src.writeStream.foreachBatch(handle).option("checkpointLocation", ckpt))
     if not os.path.isdir(results_dir):  # pragma: no cover - corpus has dups
         return spark.createDataFrame([], "doc_a long, doc_b long")
     return spark.read.parquet(results_dir).distinct()
@@ -1052,23 +1011,9 @@ def stream_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             results_dir
         )
 
-    src = (
-        spark.readStream.schema("doc_id long, lang string, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
-
-    def run():
-        q = (
-            src.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    _with_stream_partitions(spark, run)
+    src = read_segments(spark, root, "doc_id long, lang string, text string")
+    ckpt = os.path.join(work, "ckpt")
+    _drain(spark, src.writeStream.foreachBatch(handle).option("checkpointLocation", ckpt))
     # per-doc scores are deterministic, so distinct() also absorbs the
     # duplicate append a retried foreachBatch would leave behind (same
     # exactly-once insurance as stream_incremental_dedup)
@@ -1160,23 +1105,9 @@ def stream_ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(results_dir)
         )
 
-    src = (
-        spark.readStream.schema("query_id long, qe array<float>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
-
-    def run():
-        q = (
-            src.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    _with_stream_partitions(spark, run)
+    src = read_segments(spark, root, "query_id long, qe array<float>")
+    ckpt = os.path.join(work, "ckpt")
+    _drain(spark, src.writeStream.foreachBatch(handle).option("checkpointLocation", ckpt))
     # rows are deterministic per query, so distinct() also absorbs the
     # duplicate append a retried foreachBatch would leave behind (same
     # exactly-once insurance as stream_incremental_dedup)
@@ -1290,9 +1221,7 @@ def stream_stream_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev_raw = spark.read.parquet(f"{sf_dir}/events.parquet")  # ts bigint nanos
 
     def side(pred: str) -> DataFrame:
-        import os
         import shutil
-        import tempfile
 
         root = scratch_dir("arcon_ssj_")
         shutil.copyfile(f"{sf_dir}/events.parquet", os.path.join(root, "b.parquet"))
@@ -1335,9 +1264,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     slowly-changing dimensions to a firehose (re-broadcast per batch
     keeps the dim fresh). Impossible in the reference (single-upstream
     operators, dfg.rs:61-114); output equals the batch join oracle."""
-    import os
     import shutil
-    import tempfile
 
     ev_raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     root = scratch_dir("arcon_sse_")
@@ -1363,17 +1290,13 @@ def stream_distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches and emits each (user_id, event_type) exactly once;
     output equals the batch DISTINCT oracle. (In production add
     withWatermark + the event-time column to bound the state.)"""
-    import os
     import shutil
-    import tempfile
 
     ev_raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     root = scratch_dir("arcon_sdd_")
     shutil.copyfile(f"{sf_dir}/events.parquet", os.path.join(root, "b.parquet"))
     src = (
-        spark.readStream.schema(ev_raw.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
+        read_segments(spark, root, ev_raw.schema)
         .select("user_id", "event_type")
         .dropDuplicates(["user_id", "event_type"])
     )
@@ -1585,11 +1508,7 @@ def stream_count_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     root = write_segments([first_half, second_half, flush])
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     out = apply_operator(
         src,
         ["user_id"],
@@ -1683,9 +1602,6 @@ def stream_late_data_side_output(spark: SparkSession, sf_dir: str) -> DataFrame:
     side='late', so the oracle proves no row is lost or duplicated by
     the split — a stronger contract than checking the quarantine alone.
     """
-    import os
-    import tempfile
-
     from arcon_spark.streaming.side_output import run_with_late_side_output
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -1698,11 +1614,7 @@ def stream_late_data_side_output(spark: SparkSession, sf_dir: str) -> DataFrame:
     side_dir = os.path.join(out, "late")
     main_dir = os.path.join(out, "main")
 
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     run_with_late_side_output(
         spark,
         src,
@@ -1766,45 +1678,17 @@ def stream_running_counts_update_mode(spark: SparkSession, sf_dir: str) -> DataF
     carried state across batches (batch-2 rows supersede, not append).
     Reference parity: this is the ReducerState/AggregatorState running
     fold (arcon_state backend/mod.rs:204-242) surfaced as a stream."""
-    import os
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
     root = write_segments(
         [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)]
     )
-    out = scratch_dir("arcon_ivm_") + "/history"
 
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     agg = src.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n"), msum(F.col("value"), 2).alias("sum_value")
     )
 
-    def fb(batch_df: DataFrame, eid: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(eid)).write.mode("append").parquet(out)
-
-    def run():
-        q = (
-            agg.writeStream.foreachBatch(fb)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    _with_stream_partitions(spark, run)
-    hist = spark.read.parquet(out)
-    w = Window.partitionBy("user_id").orderBy(F.col("batch_id").desc())
-    return (
-        hist.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n", "sum_value")
-    )
+    return _drain_latest(spark, agg, ["user_id"])
 
 
 @register(
@@ -1830,19 +1714,12 @@ def stream_cumulate_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     early partials are REAL emitted rows, not recomputations. Same
     exact fan-out projection as the batch twin (map-side, ≤4 rows per
     event), one keyed state aggregate."""
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "value")
     root = write_segments(
         [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)]
     )
-    out = scratch_dir("arcon_cumulate_") + "/history"
 
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     fanned = (
         src.select("ts", "value", F.date_trunc("hour", F.col("ts")).alias("win_start"))
         .withColumn(
@@ -1862,27 +1739,7 @@ def stream_cumulate_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         msum(F.col("value"), 2).alias("sum_value"),
     )
 
-    def fb(batch_df: DataFrame, eid: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(eid)).write.mode("append").parquet(out)
-
-    def run():
-        q = (
-            agg.writeStream.foreachBatch(fb)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    _with_stream_partitions(spark, run)
-    hist = spark.read.parquet(out)
-    w = Window.partitionBy("win_start", "win_end").orderBy(F.col("batch_id").desc())
-    return (
-        hist.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("win_start", "win_end", "n", "sum_value")
-    )
+    return _drain_latest(spark, agg, ["win_start", "win_end"])
 
 
 @register(
@@ -2031,29 +1888,11 @@ def stream_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     first_half = ev.filter(F.col("ts") <= F.lit(mid))
     second_half = ev.filter(F.col("ts") > F.lit(mid))
     root = write_segments([first_half, second_half])
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     out = apply_operator(
         src, ["user_id"], EwmaOperator(), "user_id long, event_id long, ewma double"
     )
-    name = f"stream_ewma_{uuid.uuid4().hex[:8]}"
-
-    def run():
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    _with_stream_partitions(spark, run)
-    return spark.table(name)
+    return _run_to_memory(spark, out, "stream_ewma")
 
 
 @register(
@@ -2083,9 +1922,7 @@ def stream_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor-local hash probe: no state store, no shuffle, unbounded
     throughput; refreshing the profile is a re-broadcast, not a
     restart."""
-    import os
     import shutil
-    import tempfile
 
     from arcon_spark.functions.curation import mad_outlier_events
 
@@ -2241,11 +2078,7 @@ def stream_cep_purchase_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             return out or None
 
     root = write_segments([first_half, second_half])
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     out = apply_operator(
         src,
         ["user_id"],
@@ -2338,11 +2171,7 @@ def stream_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     root = write_segments([first_half, second_half, flush])
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     out = apply_operator(
         src,
         ["user_id"],
@@ -2444,11 +2273,7 @@ def stream_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     root = write_segments(halves + [flush])
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     out = apply_operator(
         src,
         ["user_id"],
@@ -2519,11 +2344,7 @@ def stream_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             return out
 
     root = write_segments(halves)
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     out = apply_operator(
         src,
         ["user_id"],
@@ -2616,11 +2437,7 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", F.lit(-1).cast("long").alias("h"))
     )
     root = write_segments(halves + [flush])
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     out = apply_operator(
         src,
         ["event_type"],
@@ -2709,11 +2526,7 @@ def stream_brown_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             return out or None
 
     root = write_segments(halves)
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     out = apply_operator(
         src,
         ["user_id"],
@@ -2817,11 +2630,7 @@ def stream_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     root = write_segments(halves + [flush])
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     out = apply_operator(
         src,
         ["user_id"],
@@ -2964,11 +2773,7 @@ def stream_absence_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
             return out or None
 
     root = write_segments(halves + [flush])
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     out = apply_operator(
         src,
         ["user_id"],
@@ -3119,11 +2924,7 @@ def stream_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     root = write_segments(halves + [flush])
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     out = apply_operator(
         src,
         ["user_id"],
@@ -3173,9 +2974,6 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys-sized state table, never the stream history. At 100 TB the
     state table is a bucketed/metastore table and the merge is a
     key-partitioned join per epoch."""
-    import os
-    import tempfile
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
@@ -3209,17 +3007,12 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         winner.write.mode("overwrite").parquet(out)
         holder["latest"] = out
 
-    q = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
+    _drain(
+        spark,
+        read_segments(spark, root, orders.schema)
         .writeStream.foreachBatch(merge)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("update"),
     )
-    q.processAllAvailable()
-    q.stop()
 
     state = spark.read.parquet(holder["latest"])
     latest = state.select(
@@ -3314,11 +3107,7 @@ def stream_temporal_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             return out or None
 
     root = write_segments([seg1, seg2])
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     out = apply_operator(
         src,
         ["user_id"],
@@ -3368,19 +3157,12 @@ def stream_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     and must hash-match the same oracle. At 100 TB the state is
     O(groups × 128 bins) regardless of stream length — the quantile
     sketch that never buffers values."""
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     root = write_segments(
         [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)]
     )
-    out = scratch_dir("arcon_sqh_") + "/history"
 
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     agg = src.groupBy(
         "event_type",
         F.least(
@@ -3388,27 +3170,7 @@ def stream_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("bin"),
     ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
 
-    def fb(batch_df: DataFrame, eid: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(eid)).write.mode("append").parquet(out)
-
-    def run():
-        q = (
-            agg.writeStream.foreachBatch(fb)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    _with_stream_partitions(spark, run)
-    hist = spark.read.parquet(out)
-    wlast = Window.partitionBy("event_type", "bin").orderBy(F.col("batch_id").desc())
-    final = (
-        hist.withColumn("rn", F.row_number().over(wlast))
-        .filter(F.col("rn") == 1)
-        .select("event_type", "bin", "cnt")
-    )
+    final = _drain_latest(spark, agg, ["event_type", "bin"])
     wcum = (
         Window.partitionBy("event_type")
         .orderBy("bin")
@@ -3544,11 +3306,7 @@ def stream_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
             return out or None
 
     root = write_segments([seg1, seg2, flush])
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     out = apply_operator(
         src,
         ["user_id"],
@@ -3667,11 +3425,7 @@ def stream_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             return out or None
 
     root = write_segments([seg1, seg2, flush])
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     out = apply_operator(
         src,
         ["user_id"],
@@ -3714,46 +3468,19 @@ def stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit_count) must hash-match the plain-COUNT(DISTINCT) oracle —
     exactness, not an estimate, the property kmv/hll twins trade
     away. Batch twin: bitmap_distinct_users."""
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "user_id")
     root = write_segments(
         [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)]
     )
-    out = scratch_dir("arcon_sbd_") + "/history"
 
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     agg = src.groupBy(
         "event_type", F.expr("user_id div 63").alias("bucket")
     ).agg(
         F.expr("bit_or(shiftleft(1L, cast(pmod(user_id, 63) as int)))").alias("bitmap")
     )
 
-    def fb(batch_df: DataFrame, eid: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(eid)).write.mode("append").parquet(out)
-
-    def run():
-        q = (
-            agg.writeStream.foreachBatch(fb)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    _with_stream_partitions(spark, run)
-    hist = spark.read.parquet(out)
-    wlast = Window.partitionBy("event_type", "bucket").orderBy(F.col("batch_id").desc())
-    final = (
-        hist.withColumn("rn", F.row_number().over(wlast))
-        .filter(F.col("rn") == 1)
-        .select("event_type", "bucket", "bitmap")
-    )
+    final = _drain_latest(spark, agg, ["event_type", "bucket"])
     return final.groupBy("event_type").agg(
         F.sum(F.expr("bit_count(bitmap)")).cast("long").alias("distinct_users"),
         F.count(F.lit(1)).cast("long").alias("n_buckets"),
@@ -3785,8 +3512,6 @@ def stream_windowed_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     and O(hours × buckets) state. Readout = latest state per key →
     Σ bit_count, hash-matched against the batch interval-join oracle
     (same truth as windowed_distinct_users_bitmap)."""
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         F.expr("unix_micros(ts) div 3600000000").alias("hidx"),
@@ -3795,13 +3520,8 @@ def stream_windowed_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = write_segments(
         [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)]
     )
-    out = scratch_dir("arcon_swd_") + "/history"
 
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     agg = (
         src.select(
             F.explode(F.expr("sequence(hidx, hidx + 2)")).alias("target"),
@@ -3812,27 +3532,7 @@ def stream_windowed_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.expr("bit_or(bit)").alias("bitmap"))
     )
 
-    def fb(batch_df: DataFrame, eid: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(eid)).write.mode("append").parquet(out)
-
-    def run():
-        q = (
-            agg.writeStream.foreachBatch(fb)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    _with_stream_partitions(spark, run)
-    hist = spark.read.parquet(out)
-    wlast = Window.partitionBy("target", "bucket").orderBy(F.col("batch_id").desc())
-    final = (
-        hist.withColumn("rn", F.row_number().over(wlast))
-        .filter(F.col("rn") == 1)
-        .select("target", "bucket", "bitmap")
-    )
+    final = _drain_latest(spark, agg, ["target", "bucket"])
     # emit only hours that actually observed events (exploded targets
     # overshoot by up to 2 hours past the last event)
     observed = ev.select("hidx").distinct().withColumnRenamed("hidx", "target")
@@ -3877,8 +3577,6 @@ def stream_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     transactional state store). That asymmetry is exactly why
     anti-entropy protocols pick XOR digests (they WANT double-apply to
     surface as a mismatch) while streaming distinct-counts pick OR."""
-    import tempfile
-
     from arcon_spark.operators.maintenance import _CK_SPARK
 
     cols = [
@@ -3889,39 +3587,14 @@ def stream_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = write_segments(
         [rows.filter(F.col("o_orderkey") % 2 == 0), rows.filter(F.col("o_orderkey") % 2 == 1)]
     )
-    out = scratch_dir("arcon_sck_") + "/history"
 
-    src = (
-        spark.readStream.schema(rows.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, rows.schema)
     agg = src.groupBy((F.col("o_orderkey") % 256).alias("bucket")).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.expr(f"bit_xor({_CK_SPARK})").alias("xor_digest"),
     )
 
-    def fb(batch_df: DataFrame, eid: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(eid)).write.mode("append").parquet(out)
-
-    def run():
-        q = (
-            agg.writeStream.foreachBatch(fb)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    _with_stream_partitions(spark, run)
-    hist = spark.read.parquet(out)
-    wlast = Window.partitionBy("bucket").orderBy(F.col("batch_id").desc())
-    return (
-        hist.withColumn("rn", F.row_number().over(wlast))
-        .filter(F.col("rn") == 1)
-        .select("bucket", "n_rows", "xor_digest")
-    )
+    return _drain_latest(spark, agg, ["bucket"])
 
 
 @register(
@@ -3963,8 +3636,6 @@ def stream_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads the state store, never the raw history. Counts are plain
     sums (mergeable, replay adds handled by exactly-once state);
     the integer fixed-point χ² is computed exactly as in batch."""
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -3974,40 +3645,13 @@ def stream_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = write_segments(
         [ev.filter(F.col("epoch") == 0), ev.filter(F.col("epoch") == 1)]
     )
-    out = scratch_dir("arcon_sdd_") + "/history"
 
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     agg = src.groupBy("event_type", "bin", "epoch").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     )
 
-    def fb(batch_df: DataFrame, eid: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(eid)).write.mode("append").parquet(out)
-
-    def run():
-        q = (
-            agg.writeStream.foreachBatch(fb)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    _with_stream_partitions(spark, run)
-    hist = spark.read.parquet(out)
-    wlast = Window.partitionBy("event_type", "bin", "epoch").orderBy(
-        F.col("batch_id").desc()
-    )
-    state = (
-        hist.withColumn("rn", F.row_number().over(wlast))
-        .filter(F.col("rn") == 1)
-        .select("event_type", "bin", "epoch", "cnt")
-    )
+    state = _drain_latest(spark, agg, ["event_type", "bin", "epoch"])
     bins = state.groupBy("event_type", "bin").agg(
         F.sum(F.when(F.col("epoch") == 0, F.col("cnt")).otherwise(0)).alias("o0"),
         F.sum(F.when(F.col("epoch") == 1, F.col("cnt")).otherwise(0)).alias("o1"),
@@ -4058,8 +3702,6 @@ def stream_union_two_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key state must equal the batch truth. Each source is its own
     readStream (two independent file trackers, two offset logs); the
     union then windows per (hour, type) in update mode."""
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
     views = ev.filter(F.col("event_type") == "view")
     purch = ev.filter(F.col("event_type") == "purchase")
@@ -4067,42 +3709,16 @@ def stream_union_two_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     root_v = write_segments([views.filter(half), views.filter(~half)])
     # opposite delivery order: purchases send the second half FIRST
     root_p = write_segments([purch.filter(~half), purch.filter(half)])
-    out = scratch_dir("arcon_su2_") + "/history"
 
     def src(root: str) -> DataFrame:
-        return (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(root)
-            .withWatermark("ts", "31 days")
-        )
+        return read_segments(spark, root, ev.schema).withWatermark("ts", "31 days")
 
     unioned = src(root_v).unionByName(src(root_p))
     agg = unioned.groupBy(
         F.date_trunc("hour", "ts").alias("hour"), "event_type"
     ).agg(F.count(F.lit(1)).cast("long").alias("n"))
 
-    def fb(batch_df: DataFrame, eid: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(eid)).write.mode("append").parquet(out)
-
-    def run():
-        q = (
-            agg.writeStream.foreachBatch(fb)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    _with_stream_partitions(spark, run)
-    hist = spark.read.parquet(out)
-    wlast = Window.partitionBy("hour", "event_type").orderBy(F.col("batch_id").desc())
-    return (
-        hist.withColumn("rn", F.row_number().over(wlast))
-        .filter(F.col("rn") == 1)
-        .select("hour", "event_type", "n")
-    )
+    return _drain_latest(spark, agg, ["hour", "event_type"])
 
 
 @register(
@@ -4139,44 +3755,17 @@ def stream_cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     one timestamp per user — the minimum any exact distinct-to-date
     needs — versus the naive stream that would carry the full seen-id
     set per hour."""
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", F.date_trunc("hour", "ts").alias("hour"), "user_id"
     )
     root = write_segments(
         [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)]
     )
-    out = scratch_dir("arcon_scd2u_") + "/history"
 
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, ev.schema)
     agg = src.groupBy("user_id").agg(F.min("hour").alias("first_hour"))
 
-    def fb(batch_df: DataFrame, eid: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(eid)).write.mode("append").parquet(out)
-
-    def run():
-        q = (
-            agg.writeStream.foreachBatch(fb)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    _with_stream_partitions(spark, run)
-    hist = spark.read.parquet(out)
-    wlast = Window.partitionBy("user_id").orderBy(F.col("batch_id").desc())
-    firsts = (
-        hist.withColumn("rn", F.row_number().over(wlast))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "first_hour")
-    )
+    firsts = _drain_latest(spark, agg, ["user_id"])
     new_per_hour = firsts.groupBy(F.col("first_hour").alias("hour")).agg(
         F.count(F.lit(1)).cast("long").alias("new_users")
     )
@@ -4231,23 +3820,9 @@ def stream_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         _funnel_flags(batch_df).write.mode("append").parquet(flags_dir)
 
-    src = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
-
-    def run():
-        q = (
-            src.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    _with_stream_partitions(spark, run)
+    src = read_segments(spark, root, "doc_id long, text string")
+    ckpt = os.path.join(work, "ckpt")
+    _drain(spark, src.writeStream.foreachBatch(handle).option("checkpointLocation", ckpt))
     return _funnel_counts(spark.read.parquet(flags_dir).distinct())
 
 
@@ -4341,23 +3916,9 @@ def stream_dp_release_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(ledger_dir)
         )
 
-    src = (
-        spark.readStream.schema("doc_id long, lang string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
-
-    def run():
-        q = (
-            src.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    _with_stream_partitions(spark, run)
+    src = read_segments(spark, root, "doc_id long, lang string")
+    ckpt = os.path.join(work, "ckpt")
+    _drain(spark, src.writeStream.foreachBatch(handle).option("checkpointLocation", ckpt))
     # merge any wave that spanned micro-batches: per (wave, lang),
     # strip the deterministic noise, sum the raw micro-counts, re-add
     # the noise once — identity for the one-file-per-wave tape, the

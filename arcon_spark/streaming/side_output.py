@@ -43,6 +43,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from arcon_spark.streaming.tape import drain
+
 __all__ = ["run_with_late_side_output"]
 
 
@@ -83,12 +85,5 @@ def run_with_late_side_output(
         finally:
             batch_df.unpersist()
 
-    q = (
-        src.writeStream.foreachBatch(fb)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    drain(src.writeStream.foreachBatch(fb).outputMode("update"))
     return holder["wm_us"] if holder["wm_us"] is not None else -1

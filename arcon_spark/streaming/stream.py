@@ -34,7 +34,6 @@ from __future__ import annotations
 
 from arcon_spark.scratch import scratch_dir
 
-import tempfile
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 from enum import Enum
@@ -44,6 +43,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
+
+from arcon_spark.streaming.tape import drain
 
 
 class ArconTime(Enum):
@@ -532,20 +533,16 @@ class DebugCapture:
         self.epochs: list[int] = []
 
     def run(self) -> "DebugCapture":
-        q = (
+        q = drain(
             self._stream.df.writeStream.format("memory")
             .queryName(self.name)
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.processAllAvailable()
         for p in q.recentProgress:
             self.epochs.append(p["batchId"])
             wm = (p.get("eventTime") or {}).get("watermark")
             if wm is not None:
                 self.watermarks.append(wm)
-        q.stop()
         return self
 
     @property

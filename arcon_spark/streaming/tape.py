@@ -6,6 +6,9 @@ Streaming's unit of progress is the micro-batch, and the file source +
 ``maxFilesPerTrigger=1`` replays a directory one file per batch in
 modification-time order — so a "tape" is a list of DataFrames written
 as sequentially-stamped files.
+
+``read_segments`` and ``drain`` are the one bounded-run path: read the
+tape one file per trigger, then run the writer to completion and stop.
 """
 
 from __future__ import annotations
@@ -14,10 +17,11 @@ from arcon_spark.scratch import scratch_dir
 
 import os
 import shutil
-import tempfile
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.types import StructType
 
 
 def write_segments(dfs: list[DataFrame], root: str | None = None) -> str:
@@ -40,3 +44,20 @@ def write_segments(dfs: list[DataFrame], root: str | None = None) -> str:
         os.utime(final, (base + i, base + i))
         shutil.rmtree(part)
     return root
+
+
+def read_segments(spark: SparkSession, root: str, schema: StructType | str) -> DataFrame:
+    """Stream the tape under `root` back one file per micro-batch."""
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(root)
+
+
+def drain(writer: DataStreamWriter) -> StreamingQuery:
+    """Start `writer` as an availableNow run, process everything the
+    sources hold, and stop it even if a batch fails. Returns the
+    stopped query; its `recentProgress` stays readable."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return q

@@ -14,35 +14,17 @@ Watermark(T) message does the same to the assigner's view).
 
 from __future__ import annotations
 
-import os
-import tempfile
-import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from arcon_spark.io import local_df
+from arcon_spark.streaming import tape
+
 
 def write_segments(spark: SparkSession, schema: str, segments: list[list[tuple]]) -> str:
-    """Write each segment as one parquet file with strictly increasing
-    mtime so FileStreamSource picks them up in order."""
-    from arcon_spark.io import local_df
-
-    root = tempfile.mkdtemp(prefix="arcon_tape_")
-    for i, rows in enumerate(segments):
-        df = local_df(spark, rows, schema)
-        part = os.path.join(root, f"seg_{i:03d}")
-        df.coalesce(1).write.parquet(part)
-        files = []
-        for dirpath, _, names in os.walk(part):
-            files += [os.path.join(dirpath, n) for n in names if n.endswith(".parquet")]
-        (f,) = files
-        final = os.path.join(root, f"{i:03d}.parquet")
-        os.rename(f, final)
-        os.utime(final, (time.time() + i, time.time() + i))
-        import shutil
-
-        shutil.rmtree(part)
-    return root
+    """Write each segment of rows as one tape file (one micro-batch)."""
+    return tape.write_segments([local_df(spark, rows, schema) for rows in segments])
 
 
 def run_tape(
@@ -55,12 +37,7 @@ def run_tape(
     """readStream over the tape (one batch per segment) → transform →
     memory sink; returns the accumulated output table."""
     root = write_segments(spark, schema, segments)
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
-    out = transform(src)
+    out = transform(tape.read_segments(spark, root, schema))
     qname = name or f"tape_{uuid.uuid4().hex[:8]}"
     q = (
         out.writeStream.format("memory")

@@ -231,6 +231,26 @@ def test_no_nondeterministic_sql_in_oracles():
     assert not offenders, f"banned SQL constructs in oracles: {offenders}"
 
 
+def test_bounded_runs_drain_through_tape_only():
+    """Every bounded stream run goes through
+    arcon_spark.streaming.tape.drain; a processAllAvailable call
+    anywhere else under arcon_spark/ or tools/ is a hand-rolled copy
+    of that lifecycle."""
+    import pathlib
+    import re
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    tape = repo / "arcon_spark" / "streaming" / "tape.py"
+    call = re.compile(r"\.processAllAvailable\s*\(")
+    offenders = [
+        str(p.relative_to(repo))
+        for d in ("arcon_spark", "tools")
+        for p in sorted((repo / d).rglob("*.py"))
+        if p != tape and call.search(p.read_text())
+    ]
+    assert not offenders, f"processAllAvailable outside streaming/tape.py: {offenders}"
+
+
 def test_spark_sql_strings_avoid_rand_and_clock():
     """Registered queries build many expressions via F.expr(...) SQL
     strings — scan the string literals inside each registered function

@@ -272,6 +272,51 @@ def test_late_side_output_split_and_monotonic_watermark(spark):
 # ---------------------------------------------------------------------------
 
 
+def test_drain_stops_and_restores_partitions_when_a_batch_fails(spark):
+    """A failing foreachBatch re-raises through _drain, leaves no
+    active query behind, and restores the session's shuffle
+    partitions."""
+    from arcon_spark.streaming.queries import STREAM_STATE_PARTITIONS, _drain
+    from arcon_spark.streaming.tape import read_segments
+    from tests.streaming_util import write_segments
+
+    root = write_segments(spark, "k long", [[(1,)], [(2,)]])
+
+    def boom(batch_df, batch_id):
+        raise RuntimeError("injected batch failure")
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(STREAM_STATE_PARTITIONS + 1))
+    try:
+        with pytest.raises(Exception, match="injected batch failure"):
+            _drain(spark, read_segments(spark, root, "k long").writeStream.foreachBatch(boom))
+        assert spark.streams.active == []
+        assert spark.conf.get(key) == str(STREAM_STATE_PARTITIONS + 1)
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_drain_latest_keeps_each_keys_last_update(spark):
+    """Update-mode readout over a two-segment tape: A updates in both
+    batches, B only in the first. The view holds A's batch-2 row and
+    B's batch-1 row, in the aggregate's own columns."""
+    from arcon_spark.streaming.queries import _drain_latest
+    from arcon_spark.streaming.tape import read_segments
+    from tests.streaming_util import write_segments
+
+    schema = "k string, v long"
+    root = write_segments(spark, schema, [[("A", 1), ("B", 5)], [("A", 2)]])
+    agg = (
+        read_segments(spark, root, schema)
+        .groupBy("k")
+        .agg(F.sum("v").alias("total"), F.count(F.lit(1)).alias("n"))
+    )
+    out = _drain_latest(spark, agg, ["k"])
+    assert out.columns == ["k", "total", "n"]
+    assert sorted(tuple(r) for r in out.collect()) == [("A", 3, 2), ("B", 5, 1)]
+
+
 def test_tape_stats_need_no_spark():
     """The split-constant helper must run without any Spark session —
     it is a duckdb parquet metadata read, so registered streaming

@@ -61,7 +61,8 @@ def run_variant(spark, sf_dir: str, variant: str) -> float:
         signatures_of_shingles,
     )
     from arcon_spark.scratch import scratch_dir
-    from arcon_spark.streaming.queries import _with_stream_partitions
+    from arcon_spark.streaming.queries import _drain
+    from arcon_spark.streaming.tape import read_segments
 
     root = build_tape(spark, sf_dir)
     work = scratch_dir("arcon_incdec_")
@@ -93,24 +94,13 @@ def run_variant(spark, sf_dir: str, variant: str) -> float:
         bands.write.mode("append").parquet(index_dir)
         bands.unpersist()
 
-    src = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
+    writer = (
+        read_segments(spark, root, "doc_id long, text string")
+        .writeStream.foreachBatch(handle)
+        .option("checkpointLocation", os.path.join(work, "ckpt"))
     )
-
-    def run():
-        q = (
-            src.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
     t0 = time.monotonic()
-    _with_stream_partitions(spark, run)
+    _drain(spark, writer)
     return time.monotonic() - t0
 
 

@@ -171,16 +171,17 @@ def main() -> int:
         # a JVM that just chewed through the 100x corpus. Warm floor:
         # one unmeasured warm pass + min-of-2 inside the session.
         lo = _spawn(name, sf01, max(300, budget * 0.2), passes=2)
-        r["t_sf01"] = round(lo["t"], 2) if lo.get("t") else None
+        r["t_sf01"] = round(lo["t"], 2) if lo.get("t") is not None else None
         r["steal_t_sf01"] = lo.get("steal")
         r["anchor_t_sf01"] = lo.get("anchor")
         hi = _spawn(name, sf10, budget)
-        r["t_sf10"] = round(hi["t"], 2) if hi.get("t") else None
+        r["t_sf10"] = round(hi["t"], 2) if hi.get("t") is not None else None
         r["steal_t_sf10"] = hi.get("steal")
         r["anchor_t_sf10"] = hi.get("anchor")
         if hi.get("err"):
             r["err_sf10"] = hi["err"]
-        if r["t_sf01"] and r["t_sf10"]:
+        # the sf0.1 floor divides, so it alone must be non-zero
+        if r["t_sf01"] and r["t_sf10"] is not None:
             r["ratio"] = round(r["t_sf10"] / r["t_sf01"], 2)
             r["exponent"] = round(math.log10(max(r["ratio"], 1e-9)) / 2.0, 2)
             r["verdict"] = (

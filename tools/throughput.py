@@ -31,30 +31,21 @@ import time
 sys.path.insert(0, "/root/repo")
 
 from arcon_spark.session import get_spark
+from arcon_spark.streaming.tape import drain, read_segments, write_segments
 
 
 def _run(spark, df, name: str) -> dict:
     qname = f"tp_{name}"
     t0 = time.time()
-    q = (
-        df.writeStream.format("noop")
-        .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    rows = sum(p.numInputRows for p in q.recentProgress)
-    q.stop()
+    q = drain(df.writeStream.format("noop").queryName(qname).outputMode("append"))
     wall = time.time() - t0
+    rows = sum(p.numInputRows for p in q.recentProgress)
     return {"pipeline": name, "rows": rows, "sec": round(wall, 2),
             "events_per_sec": int(rows / wall)}
 
 
 def main() -> None:
     from pyspark.sql import functions as F
-
-    from arcon_spark.streaming.tape import write_segments
 
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
     spark = get_spark("throughput")
@@ -130,9 +121,7 @@ def main() -> None:
         "cast(0 as long) as k",
     )
     py_root = write_segments([pyb, flush])
-    py_src = spark.readStream.schema(
-        "id long, tms long, ts timestamp, k long"
-    ).option("maxFilesPerTrigger", "1").parquet(py_root)
+    py_src = read_segments(spark, py_root, "id long, tms long, ts timestamp, k long")
     py_out = apply_operator(
         py_src, ["k"], TimerOp(), "id long, fired boolean", ts_col="ts"
     )
@@ -177,12 +166,9 @@ def main() -> None:
         def close(self) -> None:
             pass
 
-    tws_src = (
-        spark.readStream.schema("id long, tms long, ts timestamp, k long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(py_root)
-        .withWatermark("ts", "0 seconds")
-    )
+    tws_src = read_segments(
+        spark, py_root, "id long, tms long, ts timestamp, k long"
+    ).withWatermark("ts", "0 seconds")
     tws_out = tws_src.groupBy("k").transformWithStateInPandas(
         TimerTws(), "id long, fired boolean", "Append", "EventTime"
     )
