@@ -41,8 +41,17 @@ from __future__ import annotations
 
 import os
 import sys
+from collections.abc import MutableMapping
 
 _SHIM_DIR = os.path.dirname(os.path.abspath(__file__))
+
+
+def prepend_pythonpath(entry: str, env: MutableMapping[str, str] = os.environ) -> None:
+    """Put `entry` first on `env`'s PYTHONPATH unless it is already on it."""
+    existing = env.get("PYTHONPATH", "")
+    parts = existing.split(os.pathsep) if existing else []
+    if entry not in parts:
+        env["PYTHONPATH"] = os.pathsep.join([entry, *parts])
 
 
 def ensure_protobuf() -> bool:
@@ -60,12 +69,7 @@ def ensure_protobuf() -> bool:
         pass
     if _SHIM_DIR not in sys.path:
         sys.path.insert(0, _SHIM_DIR)
-    existing = os.environ.get("PYTHONPATH", "")
-    parts = existing.split(os.pathsep) if existing else []
-    if _SHIM_DIR not in parts:
-        os.environ["PYTHONPATH"] = (
-            _SHIM_DIR + (os.pathsep + existing if existing else "")
-        )
+    prepend_pythonpath(_SHIM_DIR)
     try:
         import google.protobuf  # noqa: F401
 
@@ -101,12 +105,7 @@ def ensure_protobuf_on_session(spark) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_arcon_protoshim_attached", False):
         return
-    env_pp = sc.environment.get("PYTHONPATH", "")
-    parts = env_pp.split(os.pathsep) if env_pp else []
-    if _SHIM_DIR not in parts:
-        sc.environment["PYTHONPATH"] = (
-            _SHIM_DIR + (os.pathsep + env_pp if env_pp else "")
-        )
+    prepend_pythonpath(_SHIM_DIR, sc.environment)
     try:
         import tempfile
         import zipfile

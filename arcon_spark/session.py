@@ -10,6 +10,11 @@ chosen to be the *same* knobs one would set on a 1000-executor cluster
 reading 100 TB: AQE on (runtime re-planning, skew-join splitting,
 partition coalescing), explicit shuffle partitioning, Arrow-batched
 Python interop, UTC session time.
+
+Python workers start from ``arcon_spark.worker_daemon``, which takes
+Spark's pyspark.zip, py4j zip and spark-core jar off the worker path
+when the interpreter has the same pyspark installed: every task resets
+the import caches, which re-reads each of those archives.
 """
 
 from __future__ import annotations
@@ -18,7 +23,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-from arcon_spark.protoshim import ensure_protobuf
+from arcon_spark.protoshim import ensure_protobuf, prepend_pythonpath
+
+# The directory holding the arcon_spark package.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -37,6 +45,10 @@ def get_spark(
     # shim if no real install) on PYTHONPATH so transformWithState
     # python workers can import it (see arcon_spark/protoshim).
     ensure_protobuf()
+    # Likewise the package root, so workers can import the worker daemon
+    # and unpickle functions and classes from the modules under it
+    # (arcon_spark, and in a checkout tests/).
+    prepend_pythonpath(_PACKAGE_ROOT)
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     master = f"local[{cpus}]" if cpus else "local[*]"
@@ -69,6 +81,7 @@ def get_spark(
         # oracle applies (DuckDB CAST TIMESTAMP_NS→TIMESTAMP truncates).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "arcon_spark.worker_daemon")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
     )
     for k, v in (extra_conf or {}).items():

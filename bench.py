@@ -192,12 +192,13 @@ def main() -> None:
     # tape through a windowed count so the measured streaming entry
     # reflects steady-state cost.
     from arcon_spark.scratch import scratch_dir
+    from arcon_spark.streaming.tape import drain
 
     _wdir = scratch_dir("bench_stream_warm_")
     spark.range(10).select(
         F.expr("timestamp_micros(id * 1000000)").alias("ts"), F.col("id")
     ).coalesce(1).write.mode("overwrite").parquet(_wdir + "/in")
-    _wq = (
+    drain(
         spark.readStream.schema("ts timestamp, id long")
         .parquet(_wdir + "/in")
         .withWatermark("ts", "0 seconds")
@@ -205,11 +206,7 @@ def main() -> None:
         .count()
         .writeStream.format("noop")
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    _wq.processAllAvailable()
-    _wq.stop()
 
     # Host timing noise on this container runs up to 10x on individual
     # entries between same-code runs (MEASURE.md). Per-query MIN across

@@ -20,7 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from arcon_spark import get_spark
 from arcon_spark.streaming import MeasureListener, Operator, apply_operator
-from arcon_spark.streaming.tape import write_segments
+from arcon_spark.streaming.tape import drain, read_segments, write_segments
 
 N = 100_000  # the reference uses 10M; scaled for a quick example run
 
@@ -56,11 +56,7 @@ def main() -> None:
         f"timestamp_millis(cast({flush_ms} as bigint)) as ts",
     )
     root = write_segments([ids, flush])
-    src = (
-        spark.readStream.schema("id long, t long, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, "id long, t long, ts timestamp")
     # key by id % 64 → 64 parallel stateful operator instances
     keyed = src.withColumn("k", src.id % 64)
     out = apply_operator(
@@ -70,15 +66,11 @@ def main() -> None:
         "id long, fired boolean",
         ts_col="ts",
     )
-    q = (
+    drain(
         out.writeStream.format("memory")
         .queryName("custom_op_example")
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.processAllAvailable()
-    q.stop()
     emitted = spark.table("custom_op_example")
     fired = emitted.filter("fired").count()
     print(f"elements: {emitted.filter('NOT fired').count()}, timer fires: {fired}")

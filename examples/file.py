@@ -25,10 +25,8 @@ def main() -> None:
         f.write("\n".join(str(i) for i in range(1000)))
 
     s = Stream.from_file(spark, d, fmt="text").map(parsed=F.col("value").cast("long"))
-    q = s.to_debug("file_example")
-    q.processAllAvailable()
-    q.stop()
-    total = spark.table("file_example").agg(F.sum("parsed").alias("s")).collect()[0].s
+    parsed = s.to_debug_capture("file_example").run().data
+    total = parsed.agg(F.sum("parsed").alias("s")).collect()[0].s
     print(f"sum of parsed lines: {total}")
     spark.stop()
 

@@ -27,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from arcon_spark import get_spark
-from arcon_spark.streaming.tape import write_segments
+from arcon_spark.streaming.tape import drain, read_segments, write_segments
 
 
 def main() -> None:
@@ -70,19 +70,11 @@ def main() -> None:
         if os.path.exists(old):
             shutil.rmtree(old)
 
-    src = (
-        spark.readStream.schema("user_id long, delta long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(tape)
-    )
-    q = (
+    src = read_segments(spark, tape, "user_id long, delta long")
+    drain(
         src.writeStream.foreachBatch(merge)
         .option("checkpointLocation", os.path.join(root_state, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.processAllAvailable()
-    q.stop()
 
     final = spark.read.parquet(current)
     total = final.agg(F.sum("balance")).collect()[0][0]

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from arcon_spark import get_spark
 from arcon_spark.streaming.snapshot import SnapshotCatalog
-from arcon_spark.streaming.tape import write_segments
+from arcon_spark.streaming.tape import drain, read_segments, write_segments
 
 N_PER_BATCH = 1000
 N_USERS = 16
@@ -43,24 +43,16 @@ def main() -> None:
         for i in range(3)
     ]
     root = write_segments(batches)
-    src = (
-        spark.readStream.schema("event_id long, user_id long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root)
-    )
+    src = read_segments(spark, root, "event_id long, user_id long")
 
     # keyed running count — ValueState-per-key in complete mode
     counts = src.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
 
     catalog = SnapshotCatalog(spark, tempfile.mkdtemp(prefix="arcon_tss_"))
-    q = (
+    drain(
         counts.writeStream.foreachBatch(catalog.writer("user_counts"))
         .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.processAllAvailable()
-    q.stop()
 
     eps = catalog.epochs("user_counts")
     print(f"committed epochs: {eps}")

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from arcon_spark import get_spark
 from arcon_spark.schema import ArconSchema, float32, record, uint64
 from arcon_spark.streaming import SnapshotCatalog, Stream
+from arcon_spark.streaming.tape import drain
 
 Event: ArconSchema = record("Event", id=uint64(), data=float32())
 
@@ -49,15 +50,11 @@ def main() -> None:
     src = spark.readStream.schema(events.schema).parquet(tmp)
     stateful = src.groupBy("id").agg(F.last("data").alias("data"))  # EagerValue put
 
-    q = (
+    drain(
         stateful.writeStream.outputMode("update")
         .foreachBatch(catalog.writer("events"))
         .option("checkpointLocation", tempfile.mkdtemp(prefix="arcon_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.processAllAvailable()
-    q.stop()
 
     # TSS: query the committed state snapshot as a table
     epochs = catalog.epochs("events")

@@ -29,7 +29,7 @@ from arcon_spark.io import compact_files
 from arcon_spark.operators.maintenance import zorder_key
 from arcon_spark.streaming import Stream
 from arcon_spark.streaming.snapshot import SnapshotCatalog
-from arcon_spark.streaming.tape import write_segments
+from arcon_spark.streaming.tape import drain, read_segments, write_segments
 
 
 def parquet_files(path: str) -> list[str]:
@@ -57,18 +57,14 @@ def main() -> None:
         for b in range(8)
     ]
     tape = write_segments(batches)
-    src = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(tape)
+    src = read_segments(spark, tape, schema)
     table = os.path.join(work, "t")
-    q = (
+    drain(
         src.repartition(4)
         .writeStream.format("parquet")
         .option("path", table)
         .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.processAllAvailable()
-    q.stop()
     n_small = len(parquet_files(table))
     print(f"streaming sink produced {n_small} files for 4000 rows")
     assert n_small >= 8
@@ -98,16 +94,12 @@ def main() -> None:
     # 4. snapshot retention: keep the last 2 epochs only
     cat = SnapshotCatalog(spark, os.path.join(work, "snaps"))
     src2 = spark.readStream.schema(schema).option("maxFilesPerTrigger", "2").parquet(tape)
-    q2 = (
+    drain(
         src2.groupBy("x").count()
         .writeStream.outputMode("complete")
         .foreachBatch(cat.writer("counts"))
         .option("checkpointLocation", os.path.join(work, "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q2.processAllAvailable()
-    q2.stop()
     eps = cat.epochs("counts")
     expired = cat.expire("counts", keep_last=2)
     print(f"epochs {eps} -> expired {expired}, kept {cat.epochs('counts')}")

@@ -36,10 +36,7 @@ def main() -> None:
         .window(Sliding("1000 seconds", "500 seconds", "0 seconds"))
         .agg(F.sum("value").alias("window_sum"))
     )
-    q = out.to_debug("window_example")
-    q.processAllAvailable()
-    q.stop()
-    result = spark.table("window_example").orderBy("win_start")
+    result = out.to_debug_capture("window_example").run().data.orderBy("win_start")
     result.show(10, truncate=False)
     print(f"{result.count()} windows emitted")
     spark.stop()

@@ -14,14 +14,7 @@ SF_DIR = os.environ.get("ARCON_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    # Python workers must be able to unpickle classes defined in test
-    # modules (e.g. Operator subclasses) — ship the repo root on
-    # PYTHONPATH before the JVM forks workers.
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    existing = os.environ.get("PYTHONPATH", "")
-    if repo not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = f"{repo}{os.pathsep}{existing}" if existing else repo
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     import tempfile
 
     warehouse = tempfile.mkdtemp(prefix="arcon_warehouse_")

@@ -234,18 +234,20 @@ def test_no_nondeterministic_sql_in_oracles():
 def test_bounded_runs_drain_through_tape_only():
     """Every bounded stream run goes through
     arcon_spark.streaming.tape.drain; a processAllAvailable call
-    anywhere else under arcon_spark/ or tools/ is a hand-rolled copy
-    of that lifecycle."""
+    anywhere else under arcon_spark/, tools/ or examples/, or in
+    bench.py, is a hand-rolled copy of that lifecycle."""
     import pathlib
     import re
 
     repo = pathlib.Path(__file__).resolve().parent.parent
     tape = repo / "arcon_spark" / "streaming" / "tape.py"
     call = re.compile(r"\.processAllAvailable\s*\(")
+    sources = [repo / "bench.py"] + [
+        p for d in ("arcon_spark", "tools", "examples") for p in sorted((repo / d).rglob("*.py"))
+    ]
     offenders = [
         str(p.relative_to(repo))
-        for d in ("arcon_spark", "tools")
-        for p in sorted((repo / d).rglob("*.py"))
+        for p in sources
         if p != tape and call.search(p.read_text())
     ]
     assert not offenders, f"processAllAvailable outside streaming/tape.py: {offenders}"
