@@ -3,6 +3,12 @@
 ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
+    python bench.py [query ...]
+
+times the named registry queries instead of the headline list. An
+unknown name stops it before the session starts; a query that fails
+makes it exit non-zero naming every failed query.
+
 The stdout line is sized under the driver's 2000-byte tail capture
 (slowest queries first; "n_queries"/"queries_shown"/"queries_full"
 make the trim explicit); the COMPLETE per-query record — all timings
@@ -11,13 +17,20 @@ plus per-query medians — is written to $SPARK_GRAFT_BENCH_OUT
 
 Each query is fully materialized through the `noop` sink (no driver
 collect — the same execution profile a cluster run would have).
+
+The scaling tools (tools/scaling_curve.py, tools/sf10_heavy.py) time
+through the same pieces: warm_up, time_query (one cleared-cache,
+job-grouped, optionally budgeted run), the steal/anchor stamps,
+load_results/save_results and exponent.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -155,77 +168,34 @@ def _anchor_sec() -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").split("sf")[-1]
-    spark = get_spark("arcon_spark_bench")
-
     from arcon_spark.plans.registry import queries
 
     qmap = queries()
+    # any registry query may be named (not only HEADLINE); a typo fails
+    # here instead of after the session start-up
+    names = sys.argv[1:] or HEADLINE
+    unknown = [n for n in names if n not in qmap]
+    if unknown:
+        raise SystemExit(f"unknown queries (not in registry): {unknown}")
 
-    # Uncounted warmup: JVM/codegen/parquet-footer startup costs land
-    # here, not on the first measured query.
-    from arcon_spark.io import load_table
-
-    from pyspark.sql import functions as F
-
-    load_table(spark, sf_dir, "lineitem").groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        # decimal(38,0) sum: warms the wide-decimal hash-aggregate
-        # codegen path the exact-units queries (plans/compat) all use
-        F.sum(F.round(F.col("l_quantity") * 100).cast("decimal(38,0)")).alias("u"),
-    ).write.format("noop").mode("overwrite").save()
-
-    # Python-worker warmup: the first mapInPandas/applyInPandas query
-    # pays worker-pool fork + Arrow serializer init on every core
-    # (~5-8 s across 32 workers). One identity pass spins the pool so
-    # measured queries see steady-state Python-path cost.
-    def _ident(it):
-        yield from it
-
-    spark.range(0, 64, 1, spark.sparkContext.defaultParallelism).mapInPandas(
-        _ident, "id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    # Streaming-engine warmup: the first streaming query in a session
-    # pays one-time micro-batch-engine + state-store class init (~4 s)
-    # that has nothing to do with any particular query. Run a 1-file
-    # tape through a windowed count so the measured streaming entry
-    # reflects steady-state cost.
-    from arcon_spark.scratch import scratch_dir
-    from arcon_spark.streaming.tape import drain
-
-    _wdir = scratch_dir("bench_stream_warm_")
-    spark.range(10).select(
-        F.expr("timestamp_micros(id * 1000000)").alias("ts"), F.col("id")
-    ).coalesce(1).write.mode("overwrite").parquet(_wdir + "/in")
-    drain(
-        spark.readStream.schema("ts timestamp, id long")
-        .parquet(_wdir + "/in")
-        .withWatermark("ts", "0 seconds")
-        .groupBy(F.window("ts", "5 seconds"))
-        .count()
-        .writeStream.format("noop")
-        .outputMode("append")
-    )
+    spark = get_spark("arcon_spark_bench")
+    warm_up(spark, sf_dir)
 
     # Host timing noise on this container runs up to 10x on individual
     # entries between same-code runs (MEASURE.md). Per-query MIN across
     # N passes measures steady-state plan cost instead of scheduler
     # luck; repeats are recorded in the output for transparency.
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "2")))
-    passes: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    passes: dict[str, list[float]] = {name: [] for name in names}
     anchor_before = _anchor_sec()
     stat_before = _proc_stat_ticks()
     t_all = time.time()
     for _ in range(repeats):
-        for name in HEADLINE:
-            # drop the previous query's persisted blocks so cached frames
-            # don't accumulate (and distort memory pressure) across the run
-            spark.catalog.clearCache()
-            fn = qmap[name]
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            passes[name].append(round(time.time() - t0, 3))
+        for name in names:
+            passes[name].append(time_query(spark, name, qmap[name], sf_dir))
+    failed = [name for name, ts in passes.items() if None in ts]
+    if failed:
+        raise SystemExit(f"failed queries: {failed}")
     timings = {name: min(ts) for name, ts in passes.items()}
 
     def _median(ts: list[float]) -> float:
@@ -243,7 +213,7 @@ def main() -> None:
     steal = _steal_pct(stat_before, _proc_stat_ticks())
     anchors = [anchor_before, _anchor_sec()]
 
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    sf_val = sf_of(sf_dir)
     full = json.dumps(
         {
             "metric": "headline_queries_total_sec",
@@ -287,6 +257,136 @@ def main() -> None:
     )
     sys.stdout.flush()
     print(line, flush=True)
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Uncounted warm-ups, run once per session before any timed query:
+    JVM/codegen/parquet-footer start-up, the Python worker pool and the
+    streaming engine land here, not on the first measured query."""
+    from pyspark.sql import functions as F
+
+    from arcon_spark.io import load_table
+    from arcon_spark.scratch import scratch_dir
+    from arcon_spark.streaming.tape import drain
+
+    load_table(spark, sf_dir, "lineitem").groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).alias("n"),
+        # decimal(38,0) sum: warms the wide-decimal hash-aggregate
+        # codegen path the exact-units queries (plans/compat) all use
+        F.sum(F.round(F.col("l_quantity") * 100).cast("decimal(38,0)")).alias("u"),
+    ).write.format("noop").mode("overwrite").save()
+
+    # Python-worker warmup: the first mapInPandas/applyInPandas query
+    # pays worker-pool fork + Arrow serializer init on every core
+    # (~5-8 s across 32 workers). One identity pass spins the pool so
+    # measured queries see steady-state Python-path cost.
+    def _ident(it):
+        yield from it
+
+    spark.range(0, 64, 1, spark.sparkContext.defaultParallelism).mapInPandas(
+        _ident, "id long"
+    ).write.format("noop").mode("overwrite").save()
+
+    # Streaming-engine warmup: the first streaming query in a session
+    # pays one-time micro-batch-engine + state-store class init (~4 s)
+    # that has nothing to do with any particular query. Run a 1-file
+    # tape through a windowed count so the measured streaming entry
+    # reflects steady-state cost.
+    _wdir = scratch_dir("bench_stream_warm_")
+    spark.range(10).select(
+        F.expr("timestamp_micros(id * 1000000)").alias("ts"), F.col("id")
+    ).coalesce(1).write.mode("overwrite").parquet(_wdir + "/in")
+    drain(
+        spark.readStream.schema("ts timestamp, id long")
+        .parquet(_wdir + "/in")
+        .withWatermark("ts", "0 seconds")
+        .groupBy(F.window("ts", "5 seconds"))
+        .count()
+        .writeStream.format("noop")
+        .outputMode("append")
+    )
+
+
+def time_query(spark, name: str, build, sf_dir: str, budget: float | None = None) -> float | None:
+    """Seconds to build(spark, sf_dir) and materialize it through the
+    noop sink, with the cache cleared first. Every Spark job it runs
+    carries the job group `name`. None when the query raised (printed
+    as `ERROR <name>: ...`) or ran past `budget` seconds, in which case
+    its job group is cancelled so the next measurement starts clean."""
+    sc = spark.sparkContext
+    # drop the previous query's persisted blocks so cached frames
+    # don't accumulate (and distort memory pressure) across the run
+    spark.catalog.clearCache()
+    box: dict = {}
+
+    def work() -> None:
+        try:
+            sc.setJobGroup(name, name, interruptOnCancel=True)
+            t0 = time.time()
+            build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            box["t"] = round(time.time() - t0, 3)
+        except Exception as ex:  # cancelled or a genuine failure
+            box["err"] = f"{type(ex).__name__}: {str(ex)[:160]}"
+
+    # a thread of its own keeps the job group off the caller's thread
+    # and lets the budget cut a query that never returns
+    th = threading.Thread(target=work, daemon=True)
+    th.start()
+    th.join(budget)
+    if th.is_alive():
+        print(f"ERROR {name}: over its {budget} s budget, job group cancelled", flush=True)
+        # a cancel only reaches jobs already submitted, so repeat it
+        # until the query's thread gives up (a cold session can still
+        # be planning its first job when the budget runs out)
+        for _ in range(120):
+            sc.cancelJobGroup(name)
+            th.join(1)
+            if not th.is_alive():
+                break
+        return None
+    if "err" in box:
+        print(f"ERROR {name}: {box['err']}", flush=True)
+        return None
+    return box["t"]
+
+
+def sf_of(sf_dir: str) -> float | str:
+    """Scale factor an sf directory is named for ('.../sf0.1' -> 0.1);
+    the bare suffix when it is not a number."""
+    sf = sf_dir.rstrip("/").split("sf")[-1]
+    return float(sf) if sf.replace(".", "").isdigit() else sf
+
+
+def exponent(t_small: float | None, t_large: float | None, small_dir: str, large_dir: str):
+    """(ratio, exponent) of one scaling row: ratio = t_large / t_small
+    and exponent = log(ratio) / log(factor), the factor worked out from
+    the two sf directory names. None when either time is missing; a
+    0.0 s time is a measurement and is clamped, not dropped."""
+    if t_small is None or t_large is None:
+        return None
+    factor = float(sf_of(large_dir)) / float(sf_of(small_dir))
+    ratio = round(t_large / max(t_small, 1e-9), 2)
+    return ratio, round(math.log10(max(ratio, 1e-9)) / math.log10(factor), 2)
+
+
+def load_results(path: str) -> dict:
+    """The resumable result file of a long measurement ({} when there is
+    none yet); a rerun skips the entries it already holds."""
+    if not os.path.exists(path):
+        return {}
+    with open(path) as fh:
+        results = json.load(fh)
+    print(f"resuming past {sorted(results)}", flush=True)
+    return results
+
+
+def save_results(path: str, results: dict) -> None:
+    """Checkpoint `results` atomically, so a killed run loses at most
+    the measurement in flight."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(results, fh, indent=1)
+    os.replace(tmp, path)
 
 
 def stdout_line(

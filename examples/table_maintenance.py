@@ -82,7 +82,7 @@ def main() -> None:
     df.repartitionByRange(8, zorder_key(F.col("x"), F.col("y"))).write.parquet(zdir)
     stats = (
         spark.read.parquet(zdir)
-        .groupBy(F.spark_partition_id())  # one read partition per written file here
+        .groupBy(F.input_file_name())  # one box per written file
         .agg(F.min("x"), F.max("x"), F.min("y"), F.max("y"))
     )
     boxes = [tuple(r)[1:] for r in stats.collect()]

@@ -9,6 +9,8 @@ executable as regressions.
 
 from __future__ import annotations
 
+import pytest
+
 from arcon_spark.plans.registry import REGISTRY, queries
 
 
@@ -206,21 +208,25 @@ def test_ohlc_stays_hash_aggregate(spark, sf_dir):
     assert "HashAggregate" in plan
 
 
-def test_no_batch_query_uses_sort_aggregate(spark, sf_dir):
+@pytest.fixture(scope="module")
+def batch_plans(spark, sf_dir):
+    """Executed-plan string of every batch query, built once for the
+    registry-wide guards below (plan builds dominate their cost);
+    streaming plans are checked by their own tapes."""
+    return {
+        name: fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        for name, fn in sorted(queries().items())
+        if not name.startswith("stream_")
+    }
+
+
+def test_no_batch_query_uses_sort_aggregate(batch_plans):
     """Registry-wide scale guard: every batch query's aggregation must
     stay HashAggregate / ObjectHashAggregate. SortAggregate means some
     aggregate carries a var-width buffer (min_by/first/min(string)) and
     the whole scan gets sorted per task — the packing patterns in
     ohlc_hourly_value / stateful_distinct_firsts exist to avoid it."""
-    from arcon_spark.plans.registry import queries
-
-    offenders = []
-    for name, fn in sorted(queries().items()):
-        if name.startswith("stream_"):
-            continue  # streaming plans are checked by their own tapes
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        if "SortAggregate" in plan:
-            offenders.append(name)
+    offenders = [name for name, plan in batch_plans.items() if "SortAggregate" in plan]
     assert offenders == [], offenders
 
 
@@ -263,7 +269,7 @@ def test_parquet_aggregate_pushdown_metadata_only(spark, sf_dir):
                 spark.conf.set(k, v)
 
 
-def test_no_cartesian_and_bnlj_allowlisted(spark, sf_dir):
+def test_no_cartesian_and_bnlj_allowlisted(batch_plans):
     """Registry-wide scale guard #2: no batch query may plan a
     CartesianProduct, and BroadcastNestedLoopJoin is allowed only on
     the pinned list below — each of those is a 1-row scalar-subquery
@@ -271,8 +277,6 @@ def test_no_cartesian_and_bnlj_allowlisted(spark, sf_dir):
     constant grid, which stays O(1) at any data size. A new query
     landing here unreviewed usually means an unkeyed join that would
     be quadratic at 100 TB."""
-    from arcon_spark.plans.registry import queries
-
     BNLJ_OK = {
         "graph_triangle_count",
         "priority_region_grid",
@@ -308,7 +312,7 @@ def test_no_cartesian_and_bnlj_allowlisted(spark, sf_dir):
     import pathlib
 
     # piggyback the single-partition-Window contract on the same
-    # full-registry plan walk (plan builds dominate this test's cost):
+    # full-registry plan walk:
     # every plan containing a WindowExec with no partition spec must
     # carry a justification in tools/scale_audit.GLOBAL_WINDOW_NOTES —
     # a new unbounded global sort can't land silently (r7; the audit
@@ -321,10 +325,7 @@ def test_no_cartesian_and_bnlj_allowlisted(spark, sf_dir):
     spec.loader.exec_module(scale_audit)
 
     cartesian, rogue_bnlj, rogue_gw = [], [], []
-    for name, fn in sorted(queries().items()):
-        if name.startswith("stream_"):
-            continue
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    for name, plan in batch_plans.items():
         if "CartesianProduct" in plan:
             cartesian.append(name)
         if "BroadcastNestedLoopJoin" in plan and name not in BNLJ_OK:

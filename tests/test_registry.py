@@ -253,6 +253,134 @@ def test_bounded_runs_drain_through_tape_only():
     assert not offenders, f"processAllAvailable outside streaming/tape.py: {offenders}"
 
 
+def test_time_query_cancels_a_query_over_its_budget(spark, sf_dir):
+    """bench.time_query cuts a query at its budget by cancelling its
+    job group (the sleeping Python task is interrupted, not waited
+    out), and the session times the next query normally."""
+    import time
+
+    import bench
+
+    def _sleepy(batches):
+        import time
+
+        time.sleep(60)
+        yield from batches
+
+    t0 = time.monotonic()
+    t = bench.time_query(
+        spark,
+        "sleeps_past_budget",
+        lambda s, _: s.range(1, numPartitions=1).mapInPandas(_sleepy, "id long"),
+        sf_dir,
+        budget=2,
+    )
+    assert t is None
+    assert time.monotonic() - t0 < 45, "the cancelled task ran to the end of its sleep"
+    t = bench.time_query(spark, "range_after_cancel", lambda s, _: s.range(10), sf_dir, budget=60)
+    assert isinstance(t, float) and t >= 0
+
+
+def test_bench_rejects_unknown_query_names():
+    import pathlib
+    import subprocess
+    import sys
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    out = subprocess.run(
+        [sys.executable, str(repo / "bench.py"), "tpch_q1", "no_such_query_xyz"],
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode != 0
+    assert "no_such_query_xyz" in out.stderr, out.stderr[-2000:]
+    assert "tpch_q1'" not in out.stderr  # only the unknown name is listed
+
+
+def test_only_bench_owns_the_timing_loop():
+    """bench.py is the one timing module: the worker-pool warm-up
+    (mapInPandas) and the job-group budget (setJobGroup /
+    cancelJobGroup) live there, and the tools call bench.warm_up and
+    bench.time_query instead of keeping copies."""
+    import pathlib
+    import re
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    call = re.compile(r"\b(mapInPandas|setJobGroup|cancelJobGroup)\s*\(")
+    bench_calls = set(call.findall((repo / "bench.py").read_text()))
+    assert bench_calls == {"mapInPandas", "setJobGroup", "cancelJobGroup"}, bench_calls
+    offenders = [
+        str(p.relative_to(repo))
+        for p in sorted((repo / "tools").glob("*.py"))
+        if call.search(p.read_text())
+    ]
+    assert not offenders, f"timing-loop copies outside bench.py: {offenders}"
+
+
+def test_exponent_reads_the_scale_factor_from_the_sf_dirs():
+    import bench
+
+    assert bench.exponent(2.0, 20.0, "data/sf0.1", "data/sf1/") == (10.0, 1.0)
+    assert bench.exponent(2.0, 200.0, "data/sf0.1", "data/sf10") == (100.0, 1.0)
+    assert bench.exponent(1.0, 100.0, "data/sf0.1", "data/sf10") == (100.0, 1.0)
+    assert bench.exponent(1.0, 10.0, "data/sf0.1", "data/sf10") == (10.0, 0.5)
+    # 0.0 s is a measurement, not a missing time; only None is missing
+    assert bench.exponent(0.0, 5.0, "data/sf0.1", "data/sf1")[1] > 9
+    assert bench.exponent(5.0, 0.0, "data/sf0.1", "data/sf10")[1] < -4
+    assert bench.exponent(None, 5.0, "data/sf0.1", "data/sf1") is None
+    assert bench.exponent(5.0, None, "data/sf0.1", "data/sf10") is None
+    with pytest.raises(ValueError):
+        bench.exponent(1.0, 2.0, "data/sf0.1", "data/big")
+
+
+def test_driver_sample_runs_stalest_first(tmp_path, monkeypatch):
+    """__spark_entry__.queries() orders the registry by the latest
+    round each query was hash-green in CORRECTNESS_r*.json, oldest
+    first, so the driver's prefix sample re-checks the stalest queries
+    instead of the last round's sample."""
+    import json
+    import pathlib
+    import re
+
+    import __spark_entry__ as e
+
+    rounds = sorted(
+        (
+            p
+            for p in pathlib.Path(e._REPO).glob("CORRECTNESS_r*.json")
+            if re.fullmatch(r"CORRECTNESS_r\d+", p.stem)
+        ),
+        key=lambda p: int(p.stem.split("_r")[1]),
+    )
+    last: dict[str, int] = {}
+    for p in rounds:
+        for name, res in json.loads(p.read_text()).items():
+            if res.get("hash_match") is True:
+                last[name] = int(p.stem.split("_r")[1])
+    registered = list(queries())
+    keys = list(e.queries())
+    assert sorted(keys) == sorted(registered)
+    tiers = [last.get(n, 0) for n in keys]
+    assert tiers == sorted(tiers)
+    assert tiers[0] == min(last.get(n, 0) for n in registered)
+    for a, b in zip(keys, keys[1:]):
+        if last.get(a, 0) == last.get(b, 0):
+            assert registered.index(a) < registered.index(b), (a, b)
+    # the driver's 50-query prefix is not a re-run of the newest sample
+    assert not set(keys[:50]) & set(json.loads(rounds[-1].read_text()))
+
+    # a query missing from every round leads
+    victim = keys[-1]
+    for p in rounds:
+        res = json.loads(p.read_text())
+        res.pop(victim, None)
+        (tmp_path / p.name).write_text(json.dumps(res))
+    monkeypatch.setattr(e, "_REPO", str(tmp_path))
+    assert list(e.queries())[0] == victim
+
+
 def test_spark_sql_strings_avoid_rand_and_clock():
     """Registered queries build many expressions via F.expr(...) SQL
     strings — scan the string literals inside each registered function

@@ -5,11 +5,13 @@ measurements).
 Usage:
     python tools/scaling_curve.py [SF01_DIR SF1_DIR [OUT_JSON]]
 
-For each query: min-of-N wall time at both scale factors through the
-noop sink (bench.py's protocol: no driver collect, cache cleared
-between runs, warmed JVM/Python paths), then
+For each query: min-of-N wall time at both scale factors through
+bench.time_query (bench.py's protocol: no driver collect, cache cleared
+between runs, warmed JVM/Python/streaming paths), then
 
-    exponent = log10(t_sf1 / t_sf01)        (factor is 10x)
+    exponent = log10(t_sf1 / t_sf01) / log10(factor)
+
+with the factor read from the two sf directory names (bench.exponent).
 
 EXPECTED is the query's theoretical exponent from its plan shape:
 ~1 for linear scans/aggregates/banded LSH (sub-linear readings happen
@@ -31,16 +33,13 @@ evidence.
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import sys
-import threading
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench  # steal%/anchor helpers — every curve row carries contention evidence
+import bench  # the timing harness: warm-up, budgeted runs, stamps, result file
 
 # (name, expected exponent, sf1 passes, sf1 budget seconds)
 QUERIES = [
@@ -105,21 +104,6 @@ QUERIES = [
 ]
 
 
-def _warmup(spark, sf_dir: str) -> None:
-    from arcon_spark.io import load_table
-
-    load_table(spark, sf_dir, "lineitem").groupBy("l_returnflag").count().write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    def _ident(it):
-        yield from it
-
-    spark.range(0, 64, 1, spark.sparkContext.defaultParallelism).mapInPandas(
-        _ident, "id long"
-    ).write.format("noop").mode("overwrite").save()
-
-
 def main() -> int:
     sf01 = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     sf1 = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scratch/sf1"
@@ -129,7 +113,6 @@ def main() -> int:
     from arcon_spark.plans.registry import queries
 
     spark = get_spark("scaling_curve")
-    sc = spark.sparkContext
     qmap = queries()
 
     only = {
@@ -139,51 +122,13 @@ def main() -> int:
     if only:
         QUERIES = [q for q in QUERIES if q[0] in only]
 
-    results: dict = {}
-    if os.path.exists(out_path):
-        with open(out_path) as fh:
-            results = json.load(fh)
-        print(f"resuming: {sorted(k for k in results)}", flush=True)
-
-    def save() -> None:
-        tmp = out_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(results, fh, indent=1)
-        os.replace(tmp, out_path)
-
-    def run_once(name: str, sf_dir: str, budget: float) -> float | None:
-        """One measured execution under a cancellable job group; None
-        on budget blow-out (the job group is cancelled so the next
-        measurement starts clean)."""
-        group = f"curve_{name}_{time.time_ns()}"
-        box: dict = {}
-
-        def work() -> None:
-            try:
-                sc.setJobGroup(group, name, interruptOnCancel=True)
-                t0 = time.time()
-                qmap[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                box["t"] = time.time() - t0
-            except Exception as ex:  # cancelled or genuine failure
-                box["err"] = f"{type(ex).__name__}: {str(ex)[:160]}"
-
-        th = threading.Thread(target=work, daemon=True)
-        th.start()
-        th.join(budget)
-        if th.is_alive():
-            print(f"  BUDGET EXCEEDED ({budget}s) -> cancelling {name}", flush=True)
-            sc.cancelJobGroup(group)
-            th.join(120)
-            return None
-        if "err" in box:
-            print(f"  ERROR {name}: {box['err']}", flush=True)
-            return None
-        return box["t"]
+    results = bench.load_results(out_path)
+    # an sf directory name without a scale factor fails here, not
+    # after the whole curve has been measured
+    bench.exponent(1.0, 1.0, sf01, sf1)
 
     for sf_dir, key, budget_scale in ((sf01, "t_sf01", 0.2), (sf1, "t_sf1", 1.0)):
-        _warmup(spark, sf_dir)
+        bench.warm_up(spark, sf_dir)
         pending = [
             q for q in QUERIES if key not in results.get(q[0], {})
         ]
@@ -194,7 +139,7 @@ def main() -> int:
         # over PENDING queries only, so resumed reruns warm exactly
         # what they re-measure.
         for name, _, _, budget in pending:
-            run_once(name, sf_dir, budget * budget_scale)
+            bench.time_query(spark, name, qmap[name], sf_dir, budget * budget_scale)
         print(f"{key} warm pass done ({len(pending)} queries)", flush=True)
         for name, expected, sf1_passes, budget in QUERIES:
             r = results.setdefault(name, {"expected": expected})
@@ -214,9 +159,8 @@ def main() -> int:
             # can be pinned blind (the r10 ts_similarity_topk row was
             # a contended capture distinguishable only by prose)
             stat_before = bench._proc_stat_ticks()
-            for i in range(passes):
-                spark.catalog.clearCache()
-                t = run_once(name, sf_dir, budget * budget_scale)
+            for _ in range(passes):
+                t = bench.time_query(spark, name, qmap[name], sf_dir, budget * budget_scale)
                 if t is not None:
                     best = min(best, t)
             r[key] = round(best, 2) if best is not math.inf else None
@@ -229,18 +173,16 @@ def main() -> int:
                 f"  steal={r['steal_' + key]}% anchor={r['anchor_' + key]}s",
                 flush=True,
             )
-            save()
+            bench.save_results(out_path, results)
 
     for name, r in results.items():
-        if r.get("t_sf01") and r.get("t_sf1"):
-            r["ratio"] = round(r["t_sf1"] / max(r["t_sf01"], 1e-9), 2)
-            r["exponent"] = round(math.log10(max(r["ratio"], 1e-9)), 2)
-            r["verdict"] = (
-                "ok" if r["exponent"] <= r["expected"] + 0.15 else "SUPER-LINEAR"
-            )
-        else:
+        e = bench.exponent(r.get("t_sf01"), r.get("t_sf1"), sf01, sf1)
+        if e is None:
             r["verdict"] = "TIMEOUT-OR-ERROR"
-    save()
+        else:
+            r["ratio"], r["exponent"] = e
+            r["verdict"] = "ok" if r["exponent"] <= r["expected"] + 0.15 else "SUPER-LINEAR"
+    bench.save_results(out_path, results)
     bad = [n for n, r in results.items() if r["verdict"] != "ok"]
     print(f"\n{len(results) - len(bad)} ok, flagged: {bad}", flush=True)
     return 0

@@ -10,7 +10,8 @@ the mega-session pathology documented in MEASURE.md r8 is exactly what
 a five-family sf10 sitting would hit), measures sf0.1 warm min-of-2
 then ONE sf10 pass under a cancellable budget, and stamps every row
 with /proc/stat steal% plus an int-loop anchor so no row can be pinned
-blind. The factor is 100x, so
+blind. At the default 100x factor (read from the sf directory names
+by bench.exponent)
 
     exponent = log10(t_sf10 / t_sf01) / 2
 
@@ -28,12 +29,9 @@ records the documented degradation, not a regression.
 from __future__ import annotations
 
 import json
-import math
 import os
 import subprocess
 import sys
-import threading
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -50,67 +48,37 @@ FAMILIES = [
 ]
 
 
-def _frame(name: str, spark, sf_dir: str):
-    if name == "sax_banded_forced":
-        import arcon_spark.operators.analytics as A
+def _sax_banded_forced(spark, sf_dir: str):
+    """ts_similarity_topk_sax's banded zip_with verify branch, run
+    directly instead of through its density router."""
+    import arcon_spark.operators.analytics as A
 
-        prof = A._tss_prof(spark, sf_dir)
-        words = A._sax_words(prof).localCheckpoint(eager=True)
-        return A._sax_banded_verify(prof, words)
-    from arcon_spark.plans.registry import queries
-
-    return queries()[name](spark, sf_dir)
+    prof = A._tss_prof(spark, sf_dir)
+    words = A._sax_words(prof).localCheckpoint(eager=True)
+    return A._sax_banded_verify(prof, words)
 
 
 def _one(name: str, sf_dir: str, budget: float, passes: int = 1) -> None:
-    """Inner mode: print one JSON line {t, steal, anchor} (t None on
-    budget kill / error). With passes > 1, runs an UNMEASURED warm pass
-    first and reports the min of the measured passes — the sf0.1 floor
-    must be a warm floor (a cold single-pass session reads 3-7x its
-    steady state from JIT/codegen, which would flatter the exponent);
+    """Inner mode: print one line `RESULT {t, steal, anchor}` (t None
+    on budget kill / error; bench.time_query prints the reason). With
+    passes > 1, runs an UNMEASURED warm pass first and reports the min
+    of the measured passes — the sf0.1 floor must be a warm floor (a
+    cold single-pass session reads 3-7x its steady state from
+    JIT/codegen, which would flatter the exponent);
     the sf10 side stays a single cold pass, where minutes of runtime
     amortize the same warmup to noise."""
+    from arcon_spark.plans.registry import queries
     from arcon_spark.session import get_spark
 
     spark = get_spark("sf10_heavy")
-    sc = spark.sparkContext
-
-    def run_once() -> dict:
-        box: dict = {}
-
-        def work() -> None:
-            try:
-                sc.setJobGroup(f"sf10_{name}", name, interruptOnCancel=True)
-                t0 = time.time()
-                _frame(name, spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                box["t"] = time.time() - t0
-            except Exception as ex:
-                box["err"] = f"{type(ex).__name__}: {str(ex)[:160]}"
-
-        th = threading.Thread(target=work, daemon=True)
-        th.start()
-        th.join(budget)
-        if th.is_alive():
-            sc.cancelJobGroup(f"sf10_{name}")
-            th.join(120)
-            return {"err": "BUDGET"}
-        return box
+    build = _sax_banded_forced if name == "sax_banded_forced" else queries()[name]
 
     stat0 = bench._proc_stat_ticks()
     if passes > 1:
-        run_once()  # unmeasured warm pass
-    best, err = None, None
-    for _ in range(max(1, passes)):
-        spark.catalog.clearCache()
-        r = run_once()
-        if r.get("t") is not None and (best is None or r["t"] < best):
-            best = r["t"]
-        err = r.get("err", err)
+        bench.time_query(spark, name, build, sf_dir, budget)  # unmeasured warm pass
+    times = [bench.time_query(spark, name, build, sf_dir, budget) for _ in range(max(1, passes))]
     out = {
-        "t": best,
-        "err": None if best is not None else err,
+        "t": min((t for t in times if t is not None), default=None),
         "steal": bench._steal_pct(stat0, bench._proc_stat_ticks()),
         "anchor": bench._anchor_sec(),
     }
@@ -132,9 +100,13 @@ def _spawn(name: str, sf_dir: str, budget: float, passes: int = 1) -> dict:
         text=True,
         timeout=budget * (passes + 1) + 600,
     )
-    for line in p.stdout.splitlines():
+    lines = p.stdout.splitlines()
+    for line in lines:
         if line.startswith("RESULT "):
-            return json.loads(line[7:])
+            out = json.loads(line[7:])
+            if out["t"] is None:  # the last reason bench.time_query printed
+                out["err"] = next((x for x in reversed(lines) if x.startswith("ERROR ")), None)
+            return out
     return {"t": None, "err": f"no RESULT (rc={p.returncode}): {p.stderr[-200:]}"}
 
 
@@ -151,17 +123,10 @@ def main() -> int:
     sf10 = sys.argv[2] if len(sys.argv) > 2 else "/root/sf10"
     out_path = sys.argv[3] if len(sys.argv) > 3 else "scaling_sf10_r11.json"
 
-    results: dict = {}
-    if os.path.exists(out_path):
-        with open(out_path) as fh:
-            results = json.load(fh)
-        print(f"resuming past {sorted(results)}", flush=True)
-
-    def save() -> None:
-        tmp = out_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(results, fh, indent=1)
-        os.replace(tmp, out_path)
+    results = bench.load_results(out_path)
+    # an sf directory name without a scale factor fails here, not
+    # after the first family has been measured
+    bench.exponent(1.0, 1.0, sf01, sf10)
 
     for name, expected, budget in FAMILIES:
         if name in results:
@@ -180,18 +145,15 @@ def main() -> int:
         r["anchor_t_sf10"] = hi.get("anchor")
         if hi.get("err"):
             r["err_sf10"] = hi["err"]
-        # the sf0.1 floor divides, so it alone must be non-zero
-        if r["t_sf01"] and r["t_sf10"] is not None:
-            r["ratio"] = round(r["t_sf10"] / r["t_sf01"], 2)
-            r["exponent"] = round(math.log10(max(r["ratio"], 1e-9)) / 2.0, 2)
-            r["verdict"] = (
-                "ok" if r["exponent"] <= expected + 0.08 else "SUPER-LINEAR"
-            )
-        else:
+        e = bench.exponent(r["t_sf01"], r["t_sf10"], sf01, sf10)
+        if e is None:
             r["verdict"] = "TIMEOUT-OR-ERROR"
+        else:
+            r["ratio"], r["exponent"] = e
+            r["verdict"] = "ok" if r["exponent"] <= expected + 0.08 else "SUPER-LINEAR"
         results[name] = r
         print(f"{name:28s} {json.dumps(r)}", flush=True)
-        save()
+        bench.save_results(out_path, results)
     bad = [n for n, r in results.items() if r["verdict"] == "SUPER-LINEAR"]
     print(f"\nflagged SUPER-LINEAR: {bad}", flush=True)
     return 0

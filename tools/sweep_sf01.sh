@@ -6,27 +6,36 @@
 # out-of-core oracle runs can spill tens of GB of temp files. Each
 # chunk runs in a fresh process (memory resets) and spill dirs are
 # swept between chunks.
+#
+# Usage: bash tools/sweep_sf01.sh [out_log] [chunk] [name_list]
+# With name_list (a file, one query name per line) only those queries
+# are swept and out_log is appended to, not truncated: the way to
+# resume a sweep that stopped part-way.
 set -u
 SF=/root/testdata/sf0.1
 OUT=${1:-/root/repo/sweep_sf01.log}
 CHUNK=${2:-30}
-: > "$OUT"
-NAMES=$(python - <<'PY'
+LIST=${3:-}
+if [ -n "$LIST" ]; then
+  mapfile -t ALL < "$LIST"
+else
+  : > "$OUT"
+  NAMES=$(python - <<'PY'
 import sys; sys.path.insert(0, "/root/repo")
 import __spark_entry__ as e
 print("\n".join(e.queries().keys()))
 PY
 )
-mapfile -t ALL <<< "$NAMES"
+  mapfile -t ALL <<< "$NAMES"
+fi
 TOTAL=${#ALL[@]}
-echo "sweep: $TOTAL queries, chunks of $CHUNK" >> "$OUT"
+echo "sweep: $TOTAL queries${LIST:+ from $LIST}, chunks of $CHUNK" >> "$OUT"
 for ((i = 0; i < TOTAL; i += CHUNK)); do
   chunk=("${ALL[@]:i:CHUNK}")
   echo "--- chunk $((i / CHUNK)) (${chunk[0]}..${chunk[$((${#chunk[@]} - 1))]})" >> "$OUT"
   SPARK_GRAFT_CPUS=16 timeout 3000 python /root/repo/tools/check_parity.py \
     --jobs 2 "$SF" "${chunk[@]}" 2>/dev/null \
     | grep -E "^(OK|FAIL|ROWS|[0-9]+ pass)" >> "$OUT"
-  # sweep DuckDB spill + stray scratch between chunks
   # DuckDB spill only, plus arcon scratch STALE >90min - deleting
   # live /tmp/arcon_* kills concurrent pytest/parity processes
   # (DuckDB aborts when its temp vanishes; tempfile.mkdir races)
