@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from arcon_spark.io import load_table, pin_groups, spread, table_rowcount, tile_grid_side
+from arcon_spark.plans.compat import _sql_int_dot
 from arcon_spark.plans.registry import REGISTRY, register
 
 NUM_HASHES = 12
@@ -460,27 +461,11 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # embedding cosine near-dup
 # ---------------------------------------------------------------------------
 
-_SCALE = 10_000_000  # float32 has ~7 significant decimals
 # Block-matmul grids are sized per-corpus via io.tile_grid_side(n_rows)
 # (floor 8 keeps small corpora parallel) — r8: the fixed B=8 this module
 # used through r7 let per-tile memory grow with the corpus; the weighted
 # minhash tile hit (n/8)² int64 accumulators at 10x data (root-caused in
 # the sf1 scaling run, MEASURE.md r8) before the switch.
-
-# exact integer dot product of two float arrays (order-independent)
-_INT_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) ->"
-    f" cast(round(cast(x as double) * {_SCALE}.0) as bigint)"
-    f" * cast(round(cast(y as double) * {_SCALE}.0) as bigint)),"
-    " 0L, (acc, v) -> acc + v)"
-)
-
-
-def _sql_int_dot(a: str, b: str) -> str:
-    return (
-        f"SUM(CAST(round(CAST({a}[u.i] AS DOUBLE) * {_SCALE}.0) AS BIGINT)"
-        f" * CAST(round(CAST({b}[u.i] AS DOUBLE) * {_SCALE}.0) AS BIGINT))"
-    )
 
 
 @register(

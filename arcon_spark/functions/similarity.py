@@ -31,10 +31,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from arcon_spark.io import load_table, pin_groups, spread, table_rowcount, tile_grid_side
-from arcon_spark.plans.compat import EVENTS_NORM
+from arcon_spark.plans.compat import _INT_DOT, _SCALE, EVENTS_NORM, _sql_int_dot
 from arcon_spark.plans.registry import register
 
-_SCALE = 10_000_000
 TOP_K = 5
 # Query set: a FIXED-SIZE deterministic md5-order selection, NOT a
 # corpus-proportional slice. The r5 form (vec_id % 50 == 0, 2% of the
@@ -55,21 +54,6 @@ _QSEL_CTE = f"""qsel AS (
         FROM embeddings
       ) WHERE qrn <= {_QUERY_N}
     )"""
-
-_INT_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) ->"
-    f" cast(round(cast(x as double) * {_SCALE}.0) as bigint)"
-    f" * cast(round(cast(y as double) * {_SCALE}.0) as bigint)),"
-    " 0L, (acc, v) -> acc + v)"
-)
-
-
-def _sql_int_dot(a: str, b: str) -> str:
-    return (
-        f"SUM(CAST(round(CAST({a}[u.i] AS DOUBLE) * {_SCALE}.0) AS BIGINT)"
-        f" * CAST(round(CAST({b}[u.i] AS DOUBLE) * {_SCALE}.0) AS BIGINT))"
-    )
-
 
 def _with_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1934,6 +1918,10 @@ _MMR_WREL, _MMR_WPEN = 7, 3
 
 
 def _mmr_oracle() -> str:
+    # every CTE is MATERIALIZED: each sel{j} re-reads s1..s{j-1}, which
+    # re-read cand/pw/rel, and DuckDB inlines plain CTEs, so without
+    # the hint the rel join re-evaluates per reference (43s -> 1.3s at
+    # sf0.001 on 4 cores)
     steps = []
     for j in range(2, _MMR_K + 1):
         sel = " UNION ALL ".join(
@@ -1941,7 +1929,7 @@ def _mmr_oracle() -> str:
         )
         steps.append(
             f"""sel{j} AS ({sel}),
-    s{j} AS (
+    s{j} AS MATERIALIZED (
       SELECT query_id, candidate_id, rel, pen FROM (
         SELECT sc.*, row_number() OVER (
                  PARTITION BY query_id
@@ -1972,7 +1960,7 @@ def _mmr_oracle() -> str:
         )
     return f"""
     WITH {_QSEL_CTE},
-    rel AS (
+    rel AS MATERIALIZED (
       SELECT q.vec_id AS query_id, c.vec_id AS candidate_id,
              {_sql_int_dot('q.embedding', 'c.embedding')} AS rel
       FROM embeddings q JOIN embeddings c
@@ -1980,14 +1968,14 @@ def _mmr_oracle() -> str:
            UNNEST(generate_series(1, len(q.embedding))) AS u(i)
       GROUP BY 1, 2
     ),
-    cand AS (
+    cand AS MATERIALIZED (
       SELECT query_id, candidate_id, rel, rn FROM (
         SELECT query_id, candidate_id, rel,
                row_number() OVER (PARTITION BY query_id
                                   ORDER BY rel DESC, candidate_id) AS rn
         FROM rel) WHERE rn <= {_MMR_POOL}
     ),
-    pw AS (
+    pw AS MATERIALIZED (
       SELECT a.query_id, a.candidate_id AS va, b.candidate_id AS vb,
              {_sql_int_dot('ea.embedding', 'eb.embedding')} AS dot
       FROM cand a
@@ -1997,7 +1985,7 @@ def _mmr_oracle() -> str:
            UNNEST(generate_series(1, len(ea.embedding))) AS u(i)
       GROUP BY 1, 2, 3
     ),
-    s1 AS (
+    s1 AS MATERIALIZED (
       SELECT query_id, candidate_id, rel, CAST(0 AS BIGINT) AS pen
       FROM cand WHERE rn = 1
     ),

@@ -17,6 +17,11 @@ lockstep by construction.
 
 Scale guidance: s=2 for 2-decimal money columns, s=4 for products of
 two 2-decimal columns, s=6 for triple products (TPC-H q1 charge).
+
+Embedding dot products follow the same rule: each float32 component is
+rounded to a fixed-point BIGINT at _SCALE and the products are summed
+as integers (_INT_DOT on Spark, _sql_int_dot in the oracle), so the
+result is exact and independent of summation order.
 """
 
 from __future__ import annotations
@@ -68,6 +73,27 @@ def usum_final(partial_col: str, scale: int = 2) -> Column:
 def sql_msum(expr: str, scale: int = 2) -> str:
     f = 10**scale
     return f"CAST(SUM(CAST(round(({expr}) * {f}) AS HUGEINT)) AS DOUBLE) / {f}.0"
+
+
+_SCALE = 10_000_000  # float32 has ~7 significant decimals
+
+# exact integer dot product of two float arrays (order-independent);
+# a Spark SQL template with {a} and {b} array-column placeholders
+_INT_DOT = (
+    "aggregate(zip_with({a}, {b}, (x, y) ->"
+    f" cast(round(cast(x as double) * {_SCALE}.0) as bigint)"
+    f" * cast(round(cast(y as double) * {_SCALE}.0) as bigint)),"
+    " 0L, (acc, v) -> acc + v)"
+)
+
+
+def _sql_int_dot(a: str, b: str) -> str:
+    """DuckDB twin of _INT_DOT: an aggregate over the component index
+    ``u.i`` of an ``UNNEST(generate_series(...)) AS u(i)`` join."""
+    return (
+        f"SUM(CAST(round(CAST({a}[u.i] AS DOUBLE) * {_SCALE}.0) AS BIGINT)"
+        f" * CAST(round(CAST({b}[u.i] AS DOUBLE) * {_SCALE}.0) AS BIGINT))"
+    )
 
 
 def mavg(col: Column, scale: int = 2) -> Column:

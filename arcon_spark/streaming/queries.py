@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from arcon_spark.io import load_table
-from arcon_spark.plans.compat import EVENTS_NORM, msum, sql_msum
+from arcon_spark.plans.compat import _INT_DOT, EVENTS_NORM, msum, sql_msum
 from arcon_spark.plans.registry import register
 from arcon_spark.streaming.tape import drain, read_segments, write_segments
 
@@ -1049,12 +1049,7 @@ def stream_ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query WindowGroupLimit — no state store; the index is the same
     bucketed table a 100 TB vector platform pins behind its query
     tier."""
-    from arcon_spark.functions.similarity import (
-        _INT_DOT,
-        TOP_K,
-        _ivf_assignment,
-        _query_ids_df,
-    )
+    from arcon_spark.functions.similarity import TOP_K, _ivf_assignment, _query_ids_df
 
     assigned, probes = _ivf_assignment(spark, sf_dir)
     work = scratch_dir("arcon_annstream_")

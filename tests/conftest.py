@@ -1,11 +1,14 @@
 from __future__ import annotations
 
+import importlib.util
 import os
 import sys
+from typing import NamedTuple
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from arcon_spark.session import get_spark
 
@@ -28,3 +31,91 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def compare():
+    """tools/check_parity.compare, the parity gate's comparator, loaded
+    by file path (tools/ is not a package)."""
+    spec = importlib.util.spec_from_file_location(
+        "check_parity", os.path.join(REPO, "tools", "check_parity.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.compare
+
+
+class QueryResult(NamedTuple):
+    columns: list
+    schema: object  # pyspark StructType
+    rows: list
+    executed_plan: str | None  # batch queries only, captured before execution
+    formatted_plan: str | None
+
+
+class OracleResult(NamedTuple):
+    columns: list
+    types: list  # DuckDB type names
+    rows: list
+
+
+class ResultCache:
+    """Lazy per-query-name results: each name is run once per session,
+    and a run that raised re-raises, naming the query, for every
+    consumer that asks for it."""
+
+    def __init__(self, run):
+        self._run = run
+        self._done = {}
+
+    def __getitem__(self, name: str):
+        if name not in self._done:
+            try:
+                self._done[name] = (self._run(name), None)
+            except Exception as e:  # noqa: BLE001 - stored for every consumer
+                self._done[name] = (None, e)
+        result, err = self._done[name]
+        if err is not None:
+            raise RuntimeError(f"{name} failed: {type(err).__name__}: {err}") from err
+        return result
+
+
+@pytest.fixture(scope="session")
+def query_results(spark, sf_dir):
+    """One build and one collect per registered query per session; the
+    oracle parity case, the schema checks and the plan guards all read
+    this result."""
+    from arcon_spark.plans.registry import REGISTRY
+
+    def run(name):
+        spark.catalog.clearCache()
+        df = REGISTRY[name].fn(spark, sf_dir)
+        plans = (None, None)
+        if not name.startswith("stream_"):
+            qe = df._jdf.queryExecution()
+            plans = (
+                qe.executedPlan().toString(),
+                df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted"),
+            )
+        return QueryResult(df.columns, df.schema, [tuple(r) for r in df.collect()], *plans)
+
+    return ResultCache(run)
+
+
+@pytest.fixture(scope="session")
+def oracle_results(sf_dir):
+    """One DuckDB run per registered oracle per session."""
+    import duckdb
+
+    from arcon_spark.io import TABLES
+    from arcon_spark.plans.registry import oracle_sql
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+
+    def run(name):
+        rel = con.sql(oracle_sql()[name])
+        return OracleResult([d[0] for d in rel.description], [str(t) for t in rel.types], rel.fetchall())
+
+    return ResultCache(run)

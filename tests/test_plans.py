@@ -11,68 +11,67 @@ from __future__ import annotations
 
 import pytest
 
-from arcon_spark.plans.registry import REGISTRY, queries
+from arcon_spark.plans.registry import queries
 
 
-def _plan(spark, sf_dir, name: str) -> str:
-    df = queries()[name](spark, sf_dir)
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+def _plan(query_results, name: str) -> str:
+    """The query's formatted pre-execution plan, from the session's
+    query cache (conftest.py)."""
+    return query_results[name].formatted_plan
 
 
-def test_q6_predicates_push_down(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "tpch_q6")
+def test_q6_predicates_push_down(query_results):
+    plan = _plan(query_results, "tpch_q6")
     assert "PushedFilters:" in plan
     # all four predicates reach the scan
     for frag in ("l_shipdate", "l_discount", "l_quantity"):
         assert f"IsNotNull({frag})" in plan or frag in plan.split("PushedFilters:")[1].split("\n")[0]
 
 
-def test_q6_reads_only_needed_columns(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "tpch_q6")
+def test_q6_reads_only_needed_columns(query_results):
+    plan = _plan(query_results, "tpch_q6")
     read_schema = plan.split("ReadSchema:")[1].split("\n")[0]
     assert "l_extendedprice" in read_schema
     assert "l_orderkey" not in read_schema  # pruned
     assert "l_partkey" not in read_schema
 
 
-def test_q3_broadcasts_customer(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "tpch_q3")
+def test_q3_broadcasts_customer(query_results):
+    plan = _plan(query_results, "tpch_q3")
     assert "BroadcastHashJoin" in plan
 
 
-def test_dim_join_is_broadcast(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "broadcast_dim_join")
+def test_dim_join_is_broadcast(query_results):
+    plan = _plan(query_results, "broadcast_dim_join")
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan  # fact table must not shuffle
 
 
-def test_topk_uses_group_limit_pushdown(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "topk_per_group")
+def test_topk_uses_group_limit_pushdown(query_results):
+    plan = _plan(query_results, "topk_per_group")
     assert "WindowGroupLimit" in plan
 
 
-def test_sort_limit_is_take_ordered(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "sort_limit_orders")
+def test_sort_limit_is_take_ordered(query_results):
+    plan = _plan(query_results, "sort_limit_orders")
     assert "TakeOrderedAndProject" in plan  # no global sort materialization
 
 
-def test_jvm_only_queries_have_no_python(spark, sf_dir):
+def test_jvm_only_queries_have_no_python(query_results):
     """Queries documented as codegen-only must not plan a Python eval."""
     for name in ("tpch_q1", "dedup_simhash", "dedup_minhash_signatures", "text_token_count"):
-        plan = _plan(spark, sf_dir, name)
+        plan = _plan(query_results, name)
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
 
 
-def test_q1_two_level_aggregation_shape(spark, sf_dir):
+def test_q1_two_level_aggregation_shape(query_results):
     """Q1's two-level exact sum: the scan-side aggregation must still
     do map-side partial aggregation (the big data never shuffles raw),
     and the only exchanges carry per-(group, partition) partials — a
     few rows per task — then the 6-group final. Both levels partial +
     final ⇒ ≥4 HashAggregates; ≤3 Exchange mentions (level-1, level-2,
     AQE read marker)."""
-    plan = _plan(spark, sf_dir, "tpch_q1")
+    plan = _plan(query_results, "tpch_q1")
     # formatted plans mention each node twice (tree + details)
     assert plan.count("Exchange") <= 4, plan.count("Exchange")  # 2 physical
     assert plan.count("HashAggregate") >= 8  # 4 nodes: partial+final × 2 levels
@@ -199,25 +198,32 @@ def test_runtime_bloom_filter_prunes_probe_side(spark):
                 spark.conf.set(k, v)
 
 
-def test_ohlc_stays_hash_aggregate(spark, sf_dir):
+def test_ohlc_stays_hash_aggregate(query_results):
     """min_by / min(string) have var-width aggregation buffers and
     demote the agg to SortAggregate (per-task sort of the whole scan);
     the decimal(38,0) packed key keeps OHLC in HashAggregate."""
-    plan = _plan(spark, sf_dir, "ohlc_hourly_value")
+    plan = _plan(query_results, "ohlc_hourly_value")
     assert "SortAggregate" not in plan
     assert "HashAggregate" in plan
 
 
 @pytest.fixture(scope="module")
-def batch_plans(spark, sf_dir):
-    """Executed-plan string of every batch query, built once for the
-    registry-wide guards below (plan builds dominate their cost);
-    streaming plans are checked by their own tapes."""
-    return {
-        name: fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        for name, fn in sorted(queries().items())
-        if not name.startswith("stream_")
-    }
+def batch_plans(query_results):
+    """Executed-plan string of every batch query, read from the
+    session's query cache for the registry-wide guards below; streaming
+    plans are checked by their own tapes. A query that failed to build
+    fails these guards by name."""
+    plans, failed = {}, []
+    for name in sorted(queries()):
+        if name.startswith("stream_"):
+            continue
+        try:
+            plans[name] = query_results[name].executed_plan
+        except RuntimeError:
+            failed.append(name)
+    if failed:
+        pytest.fail(f"batch queries failed to build: {failed}")
+    return plans
 
 
 def test_no_batch_query_uses_sort_aggregate(batch_plans):

@@ -1,17 +1,17 @@
-"""Registry contract tests: every registered query runs at sf0.001 and
-returns a stable schema; every oracle is syntactically valid DuckDB.
+"""Registry contract tests: every registered query matches its DuckDB
+oracle's values at sf0.001, emits only driver-hashable columns, and
+obeys the determinism doctrine.
 
-The full value-parity gate lives in tools/check_parity.py (and the
-driver's CORRECTNESS_r{N}.json); these tests are the fast guard that
-keeps `pytest -x -q` meaningful during development.
+Each query is built and collected once per session (the
+``query_results`` cache in conftest.py) and compared with
+tools/check_parity.compare, the same comparator the sf0.01/sf0.1
+parity runs use; the plan guards in test_plans.py read the same cache.
 """
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
-from arcon_spark.io import TABLES
 from arcon_spark.plans.registry import REGISTRY, oracle_sql, queries
 
 
@@ -25,14 +25,6 @@ def test_every_oracle_key_is_a_query():
         assert name in q
 
 
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    return con
-
-
 #: The driver's pandas canonicalizer sorts/factorizes every output
 #: column; numpy arrays, dicts and raw bytes are unhashable there, so
 #: a query emitting these at top level is PERMANENTLY driver-red even
@@ -43,10 +35,10 @@ def duck(sf_dir):
 _DRIVER_UNHASHABLE = ("ArrayType", "MapType", "BinaryType", "StructType")
 
 
-def _assert_driver_canon_safe(name, df):
+def _assert_driver_canon_safe(name, schema):
     bad = [
         (f.name, f.dataType.typeName())
-        for f in df.schema.fields
+        for f in schema.fields
         if type(f.dataType).__name__ in _DRIVER_UNHASHABLE
     ]
     assert not bad, (
@@ -56,19 +48,12 @@ def _assert_driver_canon_safe(name, df):
 
 
 @pytest.mark.parametrize("name", sorted(queries()))
-def test_query_runs_and_schema_matches_oracle(spark, sf_dir, duck, name):
-    spec = REGISTRY[name]
-    df = spec.fn(spark, sf_dir)
-    _assert_driver_canon_safe(name, df)
-    n = df.count()
-    assert n >= 0
-    if spec.oracle is None:
-        return
-    rel = duck.sql(spec.oracle)
-    assert sorted(c.lower() for c in df.columns) == sorted(
-        c.lower() for c in [d[0] for d in rel.description]
-    ), f"{name}: column names diverge from oracle"
-    assert n == len(rel.fetchall()), f"{name}: row count diverges from oracle"
+def test_query_runs_and_schema_matches_oracle(query_results, oracle_results, compare, name):
+    res = query_results[name]
+    _assert_driver_canon_safe(name, res.schema)
+    ora = oracle_results[name]
+    category, msg = compare(name, res.columns, res.rows, ora.columns, ora.rows)
+    assert category == "pass", msg
 
 
 def test_ensure_session_confs_repairs_foreign_session(spark):
@@ -89,15 +74,11 @@ def test_ensure_session_confs_repairs_foreign_session(spark):
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-def test_reshaped_array_queries_emit_scalar_strings(spark):
+def test_reshaped_array_queries_emit_scalar_strings(query_results):
     """Regression for the r4 driver-red row: the two queries that used
     to emit ArrayType columns now emit '|'-joined scalar strings."""
-    from arcon_spark.functions.similarity import embedding_quantize_int8
-    from arcon_spark.operators.stateful import vec_state_collect
-
-    sf = "/root/testdata/sf0.001"
-    assert dict(vec_state_collect(spark, sf).dtypes)["event_types"] == "string"
-    assert dict(embedding_quantize_int8(spark, sf).dtypes)["qvec"] == "string"
+    for name, col in (("vec_state_collect", "event_types"), ("embedding_quantize_int8", "qvec")):
+        assert query_results[name].schema[col].dataType.typeName() == "string", name
 
 
 def test_oracle_covers_every_query():
@@ -109,17 +90,17 @@ def test_oracle_covers_every_query():
 
 
 @pytest.mark.parametrize("name", sorted(oracle_sql()))
-def test_oracle_types_never_hugeint(duck, name):
+def test_oracle_types_never_hugeint(oracle_results, name):
     """The driver's value hash canonicalizes DuckDB HUGEINT (int128)
     and DECIMAL differently from Spark's int64/double, so an oracle
     whose outer aggregate is an uncast SUM(BIGINT) hash-mismatches
     even when the values are identical (all 5 red CORRECTNESS_r02
     rows were exactly this). Spark can never produce those types, so
     no oracle column may type as them."""
-    desc = duck.sql(f"DESCRIBE ({oracle_sql()[name]})").fetchall()
+    ora = oracle_results[name]
     bad = [
         (col, typ)
-        for col, typ, *_ in desc
+        for col, typ in zip(ora.columns, ora.types)
         if any(b in typ.upper() for b in ("HUGEINT", "DECIMAL"))
     ]
     assert not bad, f"{name}: HUGEINT/DECIMAL oracle columns {bad}"
@@ -229,6 +210,28 @@ def test_no_nondeterministic_sql_in_oracles():
             if re.search(pat, low):
                 offenders.append((name, pat))
     assert not offenders, f"banned SQL constructs in oracles: {offenders}"
+
+
+def test_tools_and_tests_find_the_repo_from_their_own_path():
+    """Tools and tests locate the checkout from ``__file__`` (or ``$0``
+    in shell). A hard-coded absolute checkout path on sys.path makes a
+    run from any other checkout import that path's bench.py and
+    __spark_entry__.py instead of its own."""
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    # this checkout's path, and the one the tools once pinned (joined
+    # from parts so this file does not match itself)
+    pinned = {str(repo), "/".join(("", "root", "repo"))}
+    offenders = [
+        str(p.relative_to(repo))
+        for d in ("tools", "tests")
+        for p in sorted((repo / d).rglob("*"))
+        if p.is_file()
+        and "__pycache__" not in p.parts
+        and any(x in p.read_text(errors="ignore") for x in pinned)
+    ]
+    assert not offenders, f"hard-coded checkout path in: {offenders}"
 
 
 def test_bounded_runs_drain_through_tape_only():

@@ -259,8 +259,6 @@ def test_tws_runs_under_foreign_session(spark):
 
     script = textwrap.dedent(
         """
-        import sys
-        sys.path.insert(0, "/root/repo")
         from pyspark.sql import SparkSession
         spark = (
             SparkSession.builder.master("local[4]")
@@ -277,8 +275,11 @@ def test_tws_runs_under_foreign_session(spark):
         """
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    # `python -c` puts its working directory first on sys.path, so the
+    # subprocess imports this checkout's __spark_entry__ and package
     out = subprocess.run(
         [sys.executable, "-c", script],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         env=env,
         capture_output=True,
         text=True,

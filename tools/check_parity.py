@@ -4,6 +4,8 @@ Runs every registered query on Spark and its oracle on DuckDB at the
 given scale factor, then compares row count, sorted column names, and
 order-insensitive values (exact equality; floats reported with the
 max absolute delta when they mismatch so near-misses are visible).
+The comparison is `compare()`; tests/test_registry.py asserts it for
+every query at sf0.001, so this tool is for sf0.01 and sf0.1 runs.
 
 Usage: python tools/check_parity.py [--jobs N] [sf_dir] [query ...]
 
@@ -21,12 +23,14 @@ driver's behavior.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from arcon_spark.io import TABLES
 from arcon_spark.session import get_spark
@@ -48,9 +52,39 @@ def _norm_rows(cols, rows):
     return sorted(cols), sorted(out, key=repr)
 
 
+def compare(name, spark_cols, spark_rows, duck_cols, duck_rows):
+    """Order-insensitive comparison of one query's Spark result with its
+    oracle's; returns (category, message), category 'pass' | 'fail'."""
+    sc, sr = _norm_rows(spark_cols, spark_rows)
+    dc, dr = _norm_rows(duck_cols, duck_rows)
+    if sc != dc:
+        return "fail", f"FAIL  {name}: schema mismatch spark={sc} duckdb={dc}"
+    if len(sr) != len(dr):
+        return "fail", f"FAIL  {name}: rowcount spark={len(sr)} duckdb={len(dr)}"
+    if sr == dr:
+        return "pass", f"OK    {name}: {len(sr)} rows"
+    # diagnose float near-misses
+    max_delta = 0.0
+    n_diff = 0
+    first = ""
+    for a, b in zip(sr, dr):
+        if a != b:
+            if not first:
+                first = f"\n      spark : {a}\n      duckdb: {b}"
+            n_diff += 1
+            for x, y in zip(a, b):
+                if isinstance(x, float) and isinstance(y, float):
+                    max_delta = max(max_delta, abs(x - y))
+    return (
+        "fail",
+        f"FAIL  {name}: {n_diff}/{len(sr)} differing rows,"
+        f" max float delta {max_delta:.3e}{first}",
+    )
+
+
 def _check_one(spark, cursor, spec, sf_dir: str, clear_cache: bool):
-    """Run one query + oracle; returns (category, message) where
-    category is 'pass' | 'fail' | 'rows'."""
+    """Run one query + oracle and compare them; returns (category,
+    message) where category is 'pass' | 'fail' | 'rows'."""
     name = spec.name
     if clear_cache:
         spark.catalog.clearCache()  # no cross-query cached-block buildup
@@ -72,31 +106,10 @@ def _check_one(spark, cursor, spec, sf_dir: str, clear_cache: bool):
         drows = rel.fetchall()
     except Exception as e:
         return "fail", f"FAIL  {name}: duckdb error: {str(e)[:200]}"
-    sc, sr = _norm_rows(scols, srows)
-    dc, dr = _norm_rows(dcols, drows)
-    if sc != dc:
-        return "fail", f"FAIL  {name}: schema mismatch spark={sc} duckdb={dc}"
-    if len(sr) != len(dr):
-        return "fail", f"FAIL  {name}: rowcount spark={len(sr)} duckdb={len(dr)}"
-    if sr == dr:
-        return "pass", f"OK    {name}: {len(sr)} rows [{time.time()-t0:.1f}s]"
-    # diagnose float near-misses
-    max_delta = 0.0
-    n_diff = 0
-    first = ""
-    for a, b in zip(sr, dr):
-        if a != b:
-            if not first:
-                first = f"\n      spark : {a}\n      duckdb: {b}"
-            n_diff += 1
-            for x, y in zip(a, b):
-                if isinstance(x, float) and isinstance(y, float):
-                    max_delta = max(max_delta, abs(x - y))
-    return (
-        "fail",
-        f"FAIL  {name}: {n_diff}/{len(sr)} differing rows,"
-        f" max float delta {max_delta:.3e}{first}",
-    )
+    cat, msg = compare(name, scols, srows, dcols, drows)
+    if cat == "pass":
+        msg += f" [{time.time()-t0:.1f}s]"
+    return cat, msg
 
 
 def main() -> int:

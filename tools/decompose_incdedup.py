@@ -31,7 +31,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from arcon_spark.session import get_spark
 
@@ -106,7 +107,7 @@ def run_variant(spark, sf_dir: str, variant: str) -> float:
 
 def main() -> int:
     sf01 = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    sf1 = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scratch/sf1"
+    sf1 = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, ".scratch", "sf1")
     passes = int(sys.argv[3]) if len(sys.argv) > 3 else 3
     spark = get_spark("decompose_incdedup")
 
@@ -137,7 +138,7 @@ def main() -> int:
             "full": round(f, 2),
         }
     out = {"variants": results, "components": comp}
-    with open("/root/repo/decompose_incdedup.json", "w") as fh:
+    with open(os.path.join(REPO, "decompose_incdedup.json"), "w") as fh:
         json.dump(out, fh, indent=1)
     print(json.dumps(comp, indent=1))
     return 0

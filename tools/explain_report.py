@@ -9,9 +9,11 @@ Usage: python tools/explain_report.py [sf_dir]
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from arcon_spark.session import get_spark
 
@@ -104,7 +106,7 @@ def main() -> None:
     from tools.doc_digest import digest_line
 
     out += ["", digest_line(), ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md with {len(INTERESTING)} plans")
 

@@ -24,7 +24,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from arcon_spark.session import get_spark
 
@@ -126,7 +127,7 @@ def main() -> None:
     from arcon_spark.plans.registry import queries
 
     qmap = queries()
-    outdir = f"/root/repo/plans/{tag}"
+    outdir = os.path.join(REPO, "plans", tag)
     os.makedirs(outdir, exist_ok=True)
     for name in names:
         path = f"{outdir}/{name}_{suffix}.txt"

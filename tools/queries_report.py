@@ -7,10 +7,12 @@ Usage: python tools/queries_report.py
 
 from __future__ import annotations
 
+import os
 import sys
 import textwrap
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
@@ -42,7 +44,7 @@ def main() -> None:
     from tools.doc_digest import digest_line
 
     out += ["", digest_line(), ""]
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(os.path.join(REPO, "QUERIES.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote QUERIES.md with {len(REGISTRY)} entries")
 

@@ -28,9 +28,11 @@ rewrites SCALE.md takes ~13 min.
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from arcon_spark.session import get_spark
 
@@ -330,7 +332,7 @@ def main() -> None:
     from tools.doc_digest import digest_line
 
     out += ["", digest_line()]
-    with open("/root/repo/SCALE.md", "w") as f:
+    with open(os.path.join(REPO, "SCALE.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print(f"wrote SCALE.md: {len(rows)} queries, {n_zero} zero-shuffle, {n_py} python")
 

@@ -37,7 +37,8 @@ import math
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import bench  # the timing harness: warm-up, budgeted runs, stamps, result file
 
@@ -106,7 +107,7 @@ QUERIES = [
 
 def main() -> int:
     sf01 = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    sf1 = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scratch/sf1"
+    sf1 = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, ".scratch", "sf1")
     out_path = sys.argv[3] if len(sys.argv) > 3 else "scaling_curve_result.json"
 
     from arcon_spark.session import get_spark

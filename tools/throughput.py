@@ -25,10 +25,12 @@ Prints one JSON line per pipeline plus a summary line.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from arcon_spark.session import get_spark
 from arcon_spark.streaming.tape import drain, read_segments, write_segments
