@@ -33,16 +33,29 @@ def sf_dir():
     return SF_DIR
 
 
-@pytest.fixture(scope="session")
-def compare():
-    """tools/check_parity.compare, the parity gate's comparator, loaded
-    by file path (tools/ is not a package)."""
-    spec = importlib.util.spec_from_file_location(
-        "check_parity", os.path.join(REPO, "tools", "check_parity.py")
-    )
+def _tool(name: str):
+    """A module under tools/, loaded by file path (tools/ is not a
+    package)."""
+    spec = importlib.util.spec_from_file_location(name, os.path.join(REPO, "tools", f"{name}.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    return mod.compare
+    return mod
+
+
+_PLAN_DOCS = _tool("plan_docs")
+
+
+@pytest.fixture(scope="session")
+def compare():
+    """tools/check_parity.compare, the parity gate's comparator."""
+    return _tool("check_parity").compare
+
+
+@pytest.fixture(scope="session")
+def plan_docs():
+    """tools/plan_docs.py: plan capture, the SCALE.md notes and the doc
+    renderers."""
+    return _PLAN_DOCS
 
 
 class QueryResult(NamedTuple):
@@ -92,11 +105,7 @@ def query_results(spark, sf_dir):
         df = REGISTRY[name].fn(spark, sf_dir)
         plans = (None, None)
         if not name.startswith("stream_"):
-            qe = df._jdf.queryExecution()
-            plans = (
-                qe.executedPlan().toString(),
-                df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted"),
-            )
+            plans = _PLAN_DOCS.capture(df)
         return QueryResult(df.columns, df.schema, [tuple(r) for r in df.collect()], *plans)
 
     return ResultCache(run)
@@ -119,3 +128,24 @@ def oracle_results(sf_dir):
         return OracleResult([d[0] for d in rel.description], [str(t) for t in rel.types], rel.fetchall())
 
     return ResultCache(run)
+
+
+@pytest.fixture(scope="session")
+def batch_plans(query_results):
+    """Executed-plan string of every batch query, read from the query
+    cache for the registry-wide plan guards and SCALE.md; streaming
+    plans are checked by their own tapes. A query that failed to build
+    fails its consumers by name."""
+    from arcon_spark.plans.registry import queries
+
+    plans, failed = {}, []
+    for name in sorted(queries()):
+        if name.startswith("stream_"):
+            continue
+        try:
+            plans[name] = query_results[name].executed_plan
+        except RuntimeError:
+            failed.append(name)
+    if failed:
+        pytest.fail(f"batch queries failed to build: {failed}")
+    return plans

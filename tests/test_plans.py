@@ -9,10 +9,6 @@ executable as regressions.
 
 from __future__ import annotations
 
-import pytest
-
-from arcon_spark.plans.registry import queries
-
 
 def _plan(query_results, name: str) -> str:
     """The query's formatted pre-execution plan, from the session's
@@ -207,25 +203,6 @@ def test_ohlc_stays_hash_aggregate(query_results):
     assert "HashAggregate" in plan
 
 
-@pytest.fixture(scope="module")
-def batch_plans(query_results):
-    """Executed-plan string of every batch query, read from the
-    session's query cache for the registry-wide guards below; streaming
-    plans are checked by their own tapes. A query that failed to build
-    fails these guards by name."""
-    plans, failed = {}, []
-    for name in sorted(queries()):
-        if name.startswith("stream_"):
-            continue
-        try:
-            plans[name] = query_results[name].executed_plan
-        except RuntimeError:
-            failed.append(name)
-    if failed:
-        pytest.fail(f"batch queries failed to build: {failed}")
-    return plans
-
-
 def test_no_batch_query_uses_sort_aggregate(batch_plans):
     """Registry-wide scale guard: every batch query's aggregation must
     stay HashAggregate / ObjectHashAggregate. SortAggregate means some
@@ -275,7 +252,7 @@ def test_parquet_aggregate_pushdown_metadata_only(spark, sf_dir):
                 spark.conf.set(k, v)
 
 
-def test_no_cartesian_and_bnlj_allowlisted(batch_plans):
+def test_no_cartesian_and_bnlj_allowlisted(batch_plans, plan_docs):
     """Registry-wide scale guard #2: no batch query may plan a
     CartesianProduct, and BroadcastNestedLoopJoin is allowed only on
     the pinned list below — each of those is a 1-row scalar-subquery
@@ -314,39 +291,33 @@ def test_no_cartesian_and_bnlj_allowlisted(batch_plans):
         # 1-row broadcast of the mixture normalizers (tot/stot)
         "mixture_temperature_sampling",
     }
-    import importlib.util
-    import pathlib
-
-    # piggyback the single-partition-Window contract on the same
-    # full-registry plan walk:
-    # every plan containing a WindowExec with no partition spec must
-    # carry a justification in tools/scale_audit.GLOBAL_WINDOW_NOTES —
-    # a new unbounded global sort can't land silently (r7; the audit
-    # tool renders the same notes into SCALE.md)
-    spec = importlib.util.spec_from_file_location(
-        "scale_audit",
-        pathlib.Path(__file__).resolve().parent.parent / "tools" / "scale_audit.py",
-    )
-    scale_audit = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(scale_audit)
-
-    cartesian, rogue_bnlj, rogue_gw = [], [], []
+    # piggyback the single-partition-Window and high-shuffle contracts
+    # on the same full-registry plan walk: every plan with a WindowExec
+    # without partition spec, or with >= HIGH_SHUFFLE shuffles, needs a
+    # note in tools/plan_docs.py (SCALE.md renders them), and every note
+    # must still be needed — a new unbounded global sort or shuffle
+    # chain can't land silently, and a trimmed plan drops its note
+    cartesian, rogue_bnlj = [], []
+    needs = {"GLOBAL_WINDOW_NOTES": set(), "HIGH_SHUFFLE_NOTES": set()}
     for name, plan in batch_plans.items():
         if "CartesianProduct" in plan:
             cartesian.append(name)
         if "BroadcastNestedLoopJoin" in plan and name not in BNLJ_OK:
             rogue_bnlj.append(name)
-        if (
-            scale_audit._global_window_count(plan) > 0
-            and name not in scale_audit.GLOBAL_WINDOW_NOTES
-        ):
-            rogue_gw.append(name)
+        if plan_docs._global_window_count(plan) > 0:
+            needs["GLOBAL_WINDOW_NOTES"].add(name)
+        if plan_docs._exchange_counts(plan)[0] >= plan_docs.HIGH_SHUFFLE:
+            needs["HIGH_SHUFFLE_NOTES"].add(name)
     assert cartesian == [], cartesian
     assert rogue_bnlj == [], rogue_bnlj
-    assert rogue_gw == [], (
-        "single-partition Window without a GLOBAL_WINDOW_NOTES "
-        f"justification (see tools/scale_audit.py): {rogue_gw}"
-    )
+    problems = []
+    for notes, needed in needs.items():
+        have = set(getattr(plan_docs, notes))
+        if needed - have:
+            problems.append(f"no {notes} entry for {sorted(needed - have)}")
+        if have - needed:
+            problems.append(f"stale {notes} entry for {sorted(have - needed)}")
+    assert not problems, f"tools/plan_docs.py: {problems}"
 
 
 def test_batch_apply_in_pandas_sites_pin_group_parallelism():

@@ -21,27 +21,19 @@ post-localCheckpoint `Scan ExistingRDD` that shows nothing.
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from arcon_spark.session import get_spark
+from plan_docs import capture
 
 _ITER_CAP = 60  # hard cap on per-query intercepted dumps (runaway guard)
 
 
 def _fmt(df) -> str:
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    return re.sub(r"\n{3,}", "\n\n", plan.strip()) + "\n"
-
-
-def capture(spark, qmap, name: str, sf_dir: str) -> str:
-    df = qmap[name](spark, sf_dir)
-    return _fmt(df)
+    return capture(df)[1] + "\n"
 
 
 class _IterTap:
@@ -133,10 +125,10 @@ def main() -> None:
         path = f"{outdir}/{name}_{suffix}.txt"
         if iterative:
             with _IterTap(outdir, name, suffix) as tap:
-                text = capture(spark, qmap, name, sf_dir)
+                text = _fmt(qmap[name](spark, sf_dir))
             print(f"  {tap.n} iterative frame plan(s) captured")
         else:
-            text = capture(spark, qmap, name, sf_dir)
+            text = _fmt(qmap[name](spark, sf_dir))
         with open(path, "w") as fh:
             fh.write(text)
         print(f"wrote {path}")

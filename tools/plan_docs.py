@@ -1,44 +1,47 @@
-"""Generate SCALE.md: a per-query physical-plan audit of every batch
-query in the registry — the at-a-glance evidence that plans have the
-shape a 100 TB deployment needs.
+"""Render QUERIES.md, SCALE.md and PLANS.md from plans already captured.
 
-Columns:
-- exchanges:  shuffle count in the executed plan (lower = better;
-  0 = embarrassingly parallel projection/scan pipeline)
-- scans:      parquet scans (re-scans of the same table show up here)
-- python:     whether the plan contains an Arrow/Python stage
+This module builds no query and starts no Spark session. The tier-1
+session cache (tests/conftest.py::query_results) calls ``capture`` once
+per batch query at sf0.001, and tests/test_docs.py renders the three
+documents from the registry and the cached plans and compares each one
+to the committed file. A stale document fails there with a diff and the
+``cp`` line that installs the rendered copy; running those tests is how
+the documents are regenerated.
+
+SCALE.md columns:
+- shuffles: unique shuffle exchanges in the executed plan (0 =
+  embarrassingly parallel projection/scan pipeline)
+- scans:    parquet scans (re-scans of the same table show up here)
+- python:   whether the plan contains an Arrow/Python stage
   (mapInPandas / applyInPandas) — the deliberate slow path
-- bcast:      broadcast joins/exchanges (small-side dims)
-- agg:        HashAggregate/ObjectHashAggregate count (SortAggregate
+- bcast:    broadcast exchanges (small-side dims)
+- aggs:     HashAggregate/ObjectHashAggregate count (SortAggregate
   is banned registry-wide by tests/test_plans.py)
 
 Beyond the table, two enumerated-and-justified sections: plans with
->= 6 shuffles, and plans containing a single-partition WindowExec
-(empty partition spec) — each such row needs a one-line justification
-in HIGH_SHUFFLE_NOTES / GLOBAL_WINDOW_NOTES or it is flagged
-UNEXPLAINED in SCALE.md and warned on stdout.
-
-Usage: python tools/scale_audit.py [sf_dir] [query ...]
-
-With query names, audits ONLY those (printed to stdout, SCALE.md
-untouched) — the fast loop while trimming a plan; the full run that
-rewrites SCALE.md takes ~13 min.
+>= HIGH_SHUFFLE shuffles, and plans containing a single-partition
+WindowExec (empty partition spec). Each such row needs a one-line
+justification in HIGH_SHUFFLE_NOTES / GLOBAL_WINDOW_NOTES;
+tests/test_plans.py fails on a missing or stale note.
 """
 
 from __future__ import annotations
 
 import re
-import os
-import sys
+import textwrap
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-from arcon_spark.session import get_spark
+HIGH_SHUFFLE = 6
+_PYTHON_OPS = (
+    "ArrowEvalPython",
+    "MapInPandas",
+    "MapInArrow",
+    "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
+)
 
 # One-line justifications for any row that still plans >= 6 shuffles —
-# the audit refuses to leave such a row unexplained (exit message +
-# UNEXPLAINED marker in SCALE.md). Add a note when a high-shuffle plan
+# tests/test_plans.py fails on such a row without a note, and on a note
+# whose query no longer needs one. Add a note when a high-shuffle plan
 # is the semantically-required shape; trim the plan otherwise.
 HIGH_SHUFFLE_NOTES: dict[str, str] = {
     "graph_triangle_count": (
@@ -55,15 +58,6 @@ HIGH_SHUFFLE_NOTES: dict[str, str] = {
         "phase 1 moves only per-bin/per-sliver rows, never the full data; "
         "this is the bounded-memory alternative to a global sort"
     ),
-    "ts_similarity_topk_sax": (
-        "the symbolize→band→verify funnel is a chain of differently-"
-        "keyed aggregations over the CHECKPOINTED per-user profile "
-        "(users x ≤24 rows, events already reduced): segment agg, word "
-        "agg, band-key self-join, candidate distinct, dot agg, norms "
-        "— every exchange after the profile moves per-user or "
-        "per-candidate rows, never event-scale data; this pipeline "
-        "replaces the exact kernel's all-pairs tile matmul"
-    ),
     "text_bigram_assoc_score": (
         "each exchange is a distinct semantic key: spread of the "
         "single-file scan, corpus pair-count agg, vocabulary agg, the "
@@ -78,8 +72,8 @@ HIGH_SHUFFLE_NOTES: dict[str, str] = {
 # single-partition WindowExec (empty partition spec — "No Partition
 # Defined" at runtime): legitimate ONLY over a DERIVED table whose row
 # count is bounded by construction (hours, bins, slivers, scalar
-# audits), never over event-scale data. The audit refuses to leave
-# such a row unexplained, exactly like the >=6-shuffle rows.
+# audits), never over event-scale data. The plan guard refuses to
+# leave such a row unexplained, exactly like the >=6-shuffle rows.
 _TPR_NOTE = (
     "io.two_phase_rank offset table: the only global window runs over "
     "one row per range partition (rows = shuffle width, a cluster "
@@ -165,6 +159,96 @@ GLOBAL_WINDOW_NOTES: dict[str, str] = {
     ),
 }
 
+# The queries whose formatted plans PLANS.md shows, in this order.
+INTERESTING = [
+    "tpch_q1",
+    "tpch_q3",
+    "tpch_q5ish",
+    "tpch_q6",
+    "tpch_q4ish",
+    "tpch_q9ish",
+    "tpch_q18ish",
+    "tpch_q21ish",
+    "broadcast_dim_join",
+    "topk_per_group",
+    "sort_limit_orders",
+    "asof_join_purchase_view",
+    "range_join_close_events",
+    "dedup_minhash_lsh_pairs",
+    "dedup_simhash",
+    "ann_bruteforce_topk",
+    "tumbling_window_agg",
+    "session_window_agg",
+    "tpch_q2ish",
+    "vocab_top_tokens",
+    "text_tfidf_topterms",
+    "sessionize_events",
+    "kmeans_embeddings",
+    "graph_triangle_count",
+    "zorder_events_layout",
+    "histogram_equidepth_value",
+    "ohlc_hourly_value",
+    "corr_quantity_price_by_flag",
+    "funnel_conversion",
+    "interval_coverage_users",
+    "cep_purchase_error_pattern",
+    "cusum_changepoint_hourly",
+    "kmv_distinct_users",
+    "text_trigram_simpson",
+    "rolling_median_value",
+    "dedup_kept_corpus",
+    "sax_symbolize_hourly",
+    "brown_trend_forecast",
+    "debounce_events",
+    "snapshot_diff_user_stats",
+    "pq_encode_embeddings",
+    "cms_token_counts",
+    "bpe_apply_merges",
+    "multimodal_image_ahash_groups",
+    "text_unigram_entropy",
+    "text_bm25_rank",
+    "dsir_importance_weights",
+    "hard_negative_mining",
+    "dedup_cross_doc_spans",
+    "pack_concat_chunks",
+    "curation_funnel_counts",
+    "nb_lang_classifier",
+    "bitext_margin_mining",
+    "bitext_margin_mining_ivf",
+    "source_protobuf_oneof_roundtrip",
+    "dp_noisy_domain_counts",
+    "dp_median_chars",
+]
+
+
+def capture(df) -> tuple[str, str]:
+    """(executed, formatted) physical plan strings of ``df``, taken
+    before it runs; the formatted one has runs of blank lines folded."""
+    qe = df._jdf.queryExecution()
+    executed = qe.executedPlan().toString()
+    formatted = df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
+    return executed, re.sub(r"\n{3,}", "\n\n", formatted.strip())
+
+
+def normalise(plan: str, sf_dir: str, shuffle_partitions: int) -> str:
+    """A formatted plan with its session-dependent tokens as
+    placeholders: expression ids, plan ids, RDD ids and call sites
+    behind localCheckpoint (the JVM reports a reflective call site
+    differently once it has inflated it), common-subexpression names,
+    the fixture directory and any partitioning width equal to the
+    session's shuffle width."""
+    plan = plan.replace(sf_dir.rstrip("/"), "<sf_dir>")
+    for pattern, repl in (
+        (r"#\d+", "#<n>"),
+        (r"plan_id=\d+", "plan_id=<n>"),
+        (r"RDD\[\d+\]", "RDD[<n>]"),
+        (r"(RDD\[<n>\] at \w+ at )[^\s,]+", r"\1<call site>"),
+        (r"_common_expr_\d+", "_common_expr_<n>"),
+        (rf"([Pp]artitioning\((?:[^\n]*, )?){shuffle_partitions}\)", r"\g<1><n>)"),
+    ):
+        plan = re.sub(pattern, repl, plan)
+    return plan
+
 
 def _global_window_count(plan: str) -> int:
     """Count WindowExec operators with an EMPTY partition spec.
@@ -231,60 +315,72 @@ def _exchange_counts(plan: str) -> tuple[int, int]:
     return len(sh), len(bc)
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = set(sys.argv[2:])
-    spark = get_spark("scale_audit")
+def queries_md() -> str:
+    """QUERIES.md: every registered query with its tags, oracle status
+    and docstring."""
     from arcon_spark.plans.registry import REGISTRY, queries
 
-    qmap = queries()
+    queries()  # populate
+    by_tag: dict[str, int] = {}
+    for spec in REGISTRY.values():
+        for t in spec.tags:
+            by_tag[t] = by_tag.get(t, 0) + 1
+    out = [
+        "# QUERIES — the registered query surface",
+        "",
+        f"{len(REGISTRY)} queries; 'oracle' = hash-checked against DuckDB",
+        "by the driver, 'rows-only' = approximate/engine-specific result.",
+        "",
+        "Tags: " + ", ".join(f"{t}({n})" for t, n in sorted(by_tag.items())),
+        "",
+    ]
+    for name in sorted(REGISTRY):
+        spec = REGISTRY[name]
+        check = "oracle" if spec.oracle else "rows-only"
+        doc = " ".join((spec.doc or "").split())
+        doc = textwrap.fill(doc, width=72, initial_indent="  ", subsequent_indent="  ")
+        out += [f"## {name}  `[{check}]`  {' '.join(spec.tags)}", "", doc or "  (no doc)", ""]
+    return "\n".join(out)
+
+
+def scale_md(executed_plans: dict[str, str]) -> str:
+    """SCALE.md: the plan-shape table of every batch query, from its
+    executed plan, plus the justified high-shuffle and global-window
+    rows."""
+    from arcon_spark.plans.registry import REGISTRY
+
     rows = []
-    for name, fn in sorted(qmap.items()):
-        if only and name not in only:
-            continue
-        if name.startswith("stream_"):
-            continue  # streaming plans are exercised by their tapes
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    for name, plan in sorted(executed_plans.items()):
         n_sh, n_bc = _exchange_counts(plan)
         rows.append(
             (
                 name,
                 n_sh,
                 plan.count("Scan parquet"),
-                "yes" if ("ArrowEvalPython" in plan or "MapInPandas" in plan
-                          or "MapInArrow" in plan
-                          or "FlatMapGroupsInPandas" in plan
-                          or "FlatMapCoGroupsInPandas" in plan) else "",
+                "yes" if any(op in plan for op in _PYTHON_OPS) else "",
                 n_bc,
                 plan.count("HashAggregate") + plan.count("ObjectHashAggregate"),
                 ", ".join(REGISTRY[name].tags[:3]),
                 _global_window_count(plan),
             )
         )
-
-    if only:
-        for r in rows:
-            print("| " + " | ".join(str(c) for c in r) + " |")
-        return  # (last column = single-partition Window count)
-
     out = [
         "# SCALE — physical-plan audit of every batch query",
         "",
-        "Generated by tools/scale_audit.py (executed plans at "
-        f"{sf_dir}; plan SHAPE is scale-invariant — AQE may coalesce",
-        "partition counts at runtime but the operator tree is what",
-        "ships to a 1000-executor cluster). SortAggregate, cartesian",
-        "products and un-allowlisted broadcast-nested-loop joins are",
-        "banned registry-wide by tests/test_plans.py; Python stages",
-        "are deliberate (Arrow-batched multimodal/ANN featurizers),",
-        "never incidental.",
+        "Rendered by tools/plan_docs.py from the executed plans the tier-1",
+        "test session captures (tests/conftest.py::query_results, sf0.001,",
+        "before execution); tests/test_docs.py fails when this file differs.",
+        "Plan SHAPE is scale-invariant — AQE may coalesce partition counts",
+        "at runtime but the operator tree is what ships to a 1000-executor",
+        "cluster. SortAggregate, cartesian products and un-allowlisted",
+        "broadcast-nested-loop joins are banned registry-wide by",
+        "tests/test_plans.py; Python stages are deliberate (Arrow-batched",
+        "multimodal/ANN featurizers), never incidental.",
         "",
         "| query | shuffles | scans | python | bcast | aggs | tags |",
         "|---|---|---|---|---|---|---|",
     ]
-    for r in rows:
-        out.append("| " + " | ".join(str(c) for c in r[:7]) + " |")
-
+    out += ["| " + " | ".join(str(c) for c in r[:7]) + " |" for r in rows]
     n_zero = sum(1 for r in rows if r[1] == 0)
     n_py = sum(1 for r in rows if r[3])
     out += [
@@ -293,18 +389,12 @@ def main() -> None:
         f"(pure scan→project pipelines); {n_py} use the Arrow/Python "
         "path by design; the rest shuffle only on their semantic keys.",
     ]
-    high = [r for r in rows if r[1] >= 6]
+    high = [r for r in rows if r[1] >= HIGH_SHUFFLE]
     if high:
-        out += ["", "## High-shuffle rows (>= 6), each justified", ""]
-        unexplained = []
+        out += ["", f"## High-shuffle rows (>= {HIGH_SHUFFLE}), each justified", ""]
         for r in high:
-            note = HIGH_SHUFFLE_NOTES.get(r[0])
-            if note is None:
-                unexplained.append(r[0])
-                note = "UNEXPLAINED — trim the plan or add a note"
+            note = HIGH_SHUFFLE_NOTES.get(r[0], "UNEXPLAINED — trim the plan or add a note")
             out.append(f"- **{r[0]}** ({r[1]} shuffles): {note}")
-        if unexplained:
-            print(f"WARNING: unexplained >=6-shuffle plans: {unexplained}")
     gw_rows = [r for r in rows if r[7] > 0]
     if gw_rows:
         out += [
@@ -316,26 +406,37 @@ def main() -> None:
             "legitimate only over a DERIVED table whose row count is "
             "bounded by construction (hour series, fixed bins, "
             "top-k-trimmed candidates, scalar audits), never over "
-            "event-scale data. tools/scale_audit.py enumerates every "
-            "such plan; an unexplained row is a bug to fix.",
+            "event-scale data. tests/test_plans.py fails on every "
+            "such plan without a note; an unexplained row is a bug to fix.",
             "",
         ]
-        gw_unexplained = []
         for r in gw_rows:
-            note = GLOBAL_WINDOW_NOTES.get(r[0])
-            if note is None:
-                gw_unexplained.append(r[0])
-                note = "UNEXPLAINED — repartition the window or add a note"
+            note = GLOBAL_WINDOW_NOTES.get(r[0], "UNEXPLAINED — repartition the window or add a note")
             out.append(f"- **{r[0]}** ({r[7]} global window{'s' if r[7] > 1 else ''}): {note}")
-        if gw_unexplained:
-            print(f"WARNING: unexplained single-partition Window plans: {gw_unexplained}")
-    from tools.doc_digest import digest_line
-
-    out += ["", digest_line()]
-    with open(os.path.join(REPO, "SCALE.md"), "w") as f:
-        f.write("\n".join(out) + "\n")
-    print(f"wrote SCALE.md: {len(rows)} queries, {n_zero} zero-shuffle, {n_py} python")
+    return "\n".join(out) + "\n"
 
 
-if __name__ == "__main__":
-    main()
+def plans_md(formatted_plans: dict[str, str], sf_dir: str, shuffle_partitions: int) -> str:
+    """PLANS.md: the normalised formatted plan of each INTERESTING
+    query, in that order."""
+    out = [
+        "# PLANS — physical plans for headline queries",
+        "",
+        "Rendered by tools/plan_docs.py from the formatted plans the tier-1",
+        "test session captures (tests/conftest.py::query_results, sf0.001,",
+        "before execution); tests/test_docs.py fails when this file differs.",
+        "Session counters are placeholders: `#<n>`, `plan_id=<n>`,",
+        "`RDD[<n>]` with its `<call site>` and `_common_expr_<n>`; so are the",
+        "fixture directory (`<sf_dir>`) and a partitioning width equal to",
+        "`spark.sql.shuffle.partitions` (`<n>`).",
+        "What to look for: `PushedFilters` / trimmed `ReadSchema` on every",
+        "scan, `BroadcastHashJoin` for dimension joins, partial+final",
+        "`HashAggregate` pairs around a single `Exchange`,",
+        "`WindowGroupLimit` under top-k, `TakeOrderedAndProject` for",
+        "global sort+limit, and no Python evaluators in JVM-only paths.",
+        "",
+    ]
+    for name in INTERESTING:
+        plan = normalise(formatted_plans[name], sf_dir, shuffle_partitions)
+        out += [f"## {name}", "", "```", plan, "```", ""]
+    return "\n".join(out)
