@@ -15,6 +15,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 TABLES = (
     "region",
@@ -32,30 +33,65 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one synthetic table. Parquet scan → columnar, predicate
-    pushdown and column pruning apply to whatever the caller selects.
+#: Spark's inferred schema of each table file, keyed by (real path,
+#: st_mtime_ns, st_size): a rewritten file is inferred again. Two
+#: threads reading a file first may both infer it; both store the same
+#: schema.
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
 
-    events.ts is TIMESTAMP(NANOS) in the parquet; Spark reads it as
-    int64 nanos (spark.sql.legacy.parquet.nanosAsLong) and we floor to
-    microseconds here — bit-identical to the oracle's CAST(ts_ns AS
-    TIMESTAMP) truncation. The cast is a cheap projection; pushdown on
-    other columns is unaffected.
-    """
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """Spark's own inferred schema of one table file, before load_table's
+    ``ts`` normalisation. Inference runs a Spark job, so it runs once per
+    file per process; every later read declares the cached schema and
+    runs none. The session confs are set first, so the schema is learned
+    under nanosAsLong and with inferTimestampNTZ off."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
     ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    # Some dataset generations write timestamp[us] with isAdjustedToUTC=false,
-    # which Spark reads as TIMESTAMP_NTZ when inferTimestampNTZ couldn't be
-    # disabled before the scan. Normalize to TIMESTAMP (session tz is UTC, so
-    # the instant is unchanged and matches DuckDB's naive reading).
-    ntz = [c for c, t in df.dtypes if t == "timestamp_ntz"]
-    for c in ntz:
-        df = df.withColumn(c, F.col(c).cast("timestamp"))
-    return df
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        real = os.path.realpath(path)
+        st = os.stat(real)
+    except OSError:  # not on the local filesystem: Spark infers (or raises)
+        return spark.read.parquet(path).schema
+    key = (real, st.st_mtime_ns, st.st_size)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one synthetic table. Parquet scan → columnar, predicate
+    pushdown and column pruning apply to whatever the caller selects.
+    The read declares the file's schema from table_schema, so building
+    a plan runs no Spark job once the file has been read once.
+
+    events.ts comes in one of two physical types, depending on the
+    dataset generation, and both leave here as TIMESTAMP:
+    - TIMESTAMP(NANOS): Spark reads it as int64 nanos
+      (spark.sql.legacy.parquet.nanosAsLong) and we floor to
+      microseconds — bit-identical to the oracle's CAST(ts_ns AS
+      TIMESTAMP) truncation.
+    - timestamp[us] with isAdjustedToUTC=false (the sf0.001, sf0.01 and
+      sf0.1 test datasets): read as TIMESTAMP since inferTimestampNTZ is
+      off; when that conf could not be set before the schema was
+      learned, the TIMESTAMP_NTZ column is cast to TIMESTAMP (the
+      session zone is UTC, so the instant is unchanged and matches
+      DuckDB's naive reading).
+    Both are cheap projections; pushdown on other columns is unaffected.
+    """
+    schema = table_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
+    fix = {
+        f.name: F.col(f.name).cast("timestamp")
+        for f in schema.fields
+        if isinstance(f.dataType, TimestampNTZType)
+    }
+    if name == "events" and isinstance(schema["ts"].dataType, LongType):
+        fix["ts"] = F.expr("timestamp_micros(ts div 1000)")
+    return df.withColumns(fix) if fix else df
 
 
 def ensure_session_confs(spark: SparkSession) -> None:

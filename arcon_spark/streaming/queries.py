@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from arcon_spark.io import load_table
+from arcon_spark.io import load_table, table_schema
 from arcon_spark.plans.compat import _INT_DOT, EVENTS_NORM, msum, sql_msum
 from arcon_spark.plans.registry import register
 from arcon_spark.streaming.tape import drain, read_segments, write_segments
@@ -153,15 +153,12 @@ def _streamed_events(spark: SparkSession, sf_dir: str, n_sentinels: int = 2) -> 
     runs a dozen streaming queries over the same events tape, and
     rebuilding it per query is pure setup overhead. Each query still
     gets its own readStream/checkpoint over the shared directory."""
-    from arcon_spark.io import ensure_session_confs
-
-    ensure_session_confs(spark)
-    ev_raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev_schema = table_schema(spark, sf_dir, "events")
     root = _TAPE_CACHE.get((sf_dir, n_sentinels))
     if root is None:
         root = _TAPE_CACHE[(sf_dir, n_sentinels)] = _sentinel_tape(sf_dir, n_sentinels)
     src = (
-        spark.readStream.schema(ev_raw.schema)
+        spark.readStream.schema(ev_schema)
         .option("maxFilesPerTrigger", "2")
         .parquet(root)
     )
@@ -1213,14 +1210,14 @@ def stream_stream_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: in production both sides carry watermarks and the time
     bound lets the engine evict join state; with bounded tapes the
     inner join is complete without eviction."""
-    ev_raw = spark.read.parquet(f"{sf_dir}/events.parquet")  # ts bigint nanos
+    ev_schema = table_schema(spark, sf_dir, "events")
 
     def side(pred: str) -> DataFrame:
         import shutil
 
         root = scratch_dir("arcon_ssj_")
         shutil.copyfile(f"{sf_dir}/events.parquet", os.path.join(root, "b.parquet"))
-        src = spark.readStream.schema(ev_raw.schema).parquet(root)
+        src = spark.readStream.schema(ev_schema).parquet(root)
         return (
             _ts_to_timestamp(src)
             .filter(F.expr(pred))
@@ -1261,11 +1258,11 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators, dfg.rs:61-114); output equals the batch join oracle."""
     import shutil
 
-    ev_raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev_schema = table_schema(spark, sf_dir, "events")
     root = scratch_dir("arcon_sse_")
     shutil.copyfile(f"{sf_dir}/events.parquet", os.path.join(root, "b.parquet"))
     src = _ts_to_timestamp(
-        spark.readStream.schema(ev_raw.schema).parquet(root)
+        spark.readStream.schema(ev_schema).parquet(root)
     ).select("event_id", "user_id", "value")
     dim = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     joined = src.join(F.broadcast(dim), src.user_id == dim.c_custkey).select(
@@ -1287,11 +1284,11 @@ def stream_distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     withWatermark + the event-time column to bound the state.)"""
     import shutil
 
-    ev_raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev_schema = table_schema(spark, sf_dir, "events")
     root = scratch_dir("arcon_sdd_")
     shutil.copyfile(f"{sf_dir}/events.parquet", os.path.join(root, "b.parquet"))
     src = (
-        read_segments(spark, root, ev_raw.schema)
+        read_segments(spark, root, ev_schema)
         .select("user_id", "event_type")
         .dropDuplicates(["user_id", "event_type"])
     )
@@ -1922,11 +1919,11 @@ def stream_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from arcon_spark.functions.curation import mad_outlier_events
 
     stats = mad_outlier_events(spark, sf_dir).select("event_type", "med", "mad")
-    ev_raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev_schema = table_schema(spark, sf_dir, "events")
     root = scratch_dir("arcon_smad_")
     shutil.copyfile(f"{sf_dir}/events.parquet", os.path.join(root, "b.parquet"))
     src = _ts_to_timestamp(
-        spark.readStream.schema(ev_raw.schema).parquet(root)
+        spark.readStream.schema(ev_schema).parquet(root)
     ).select("event_id", "event_type", "value")
     flagged = src.join(F.broadcast(stats), "event_type").select(
         "event_id",

@@ -64,6 +64,7 @@ class QueryResult(NamedTuple):
     rows: list
     executed_plan: str | None  # batch queries only, captured before execution
     formatted_plan: str | None
+    build_actions: int  # Spark actions the query function ran before returning its frame
 
 
 class OracleResult(NamedTuple):
@@ -93,20 +94,50 @@ class ResultCache:
         return result
 
 
+def _actions(sc, group: str) -> int:
+    """Spark actions the jobs of `group` belong to: one per SQL execution,
+    plus each job that ran outside one (a bare RDD action). Adaptive
+    execution may split one action into a number of jobs that depends on
+    which stage finishes first (dedup_cc_star_contraction runs 30 or 31
+    jobs from one session to the next); the number of actions does not."""
+    kv = sc._jsc.sc().statusStore().store()
+    wrapper = sc._jvm.java.lang.Class.forName("org.apache.spark.status.JobDataWrapper")
+    actions = set()
+    for job in sc.statusTracker().getJobIdsForGroup(group):
+        sql = kv.read(wrapper, job).sqlExecutionId()
+        actions.add(("sql", sql.get()) if sql.isDefined() else ("job", job))
+    return len(actions)
+
+
 @pytest.fixture(scope="session")
 def query_results(spark, sf_dir):
     """One build and one collect per registered query per session; the
     oracle parity case, the schema checks and the plan guards all read
-    this result."""
+    this result. The build runs under its own job group; every table's
+    schema is learned up front, so a query's build-action count does not
+    depend on which query read a table first."""
+    from arcon_spark.io import TABLES, table_schema
     from arcon_spark.plans.registry import REGISTRY
+
+    sc = spark.sparkContext
+    for t in TABLES:
+        table_schema(spark, sf_dir, t)
 
     def run(name):
         spark.catalog.clearCache()
-        df = REGISTRY[name].fn(spark, sf_dir)
+        group = f"build:{name}"
+        sc.setJobGroup(group, name)
+        try:
+            df = REGISTRY[name].fn(spark, sf_dir)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
         plans = (None, None)
         if not name.startswith("stream_"):
             plans = _PLAN_DOCS.capture(df)
-        return QueryResult(df.columns, df.schema, [tuple(r) for r in df.collect()], *plans)
+        rows = [tuple(r) for r in df.collect()]
+        # counted after the collect, so the status store has seen every
+        # job the build submitted
+        return QueryResult(df.columns, df.schema, rows, *plans, _actions(sc, group))
 
     return ResultCache(run)
 

@@ -1,9 +1,10 @@
 """The generated documents match what the registry and the session's
 plans say: QUERIES.md from the registry, SCALE.md from every batch
-query's executed plan, PLANS.md from the INTERESTING queries' formatted
-plans (all rendered by tools/plan_docs.py from the query cache in
-conftest.py). A stale document fails with a unified diff, the sections
-it touches and the ``cp`` line that installs the rendered copy.
+query's executed plan and build-action count, PLANS.md from the
+INTERESTING queries' formatted plans (all rendered by tools/plan_docs.py
+from the query cache in conftest.py). A stale document fails with a
+unified diff, the sections it touches and the ``cp`` line that installs
+the rendered copy.
 """
 
 from __future__ import annotations
@@ -44,8 +45,9 @@ def test_queries_md_is_current(plan_docs, tmp_path):
     _assert_current("QUERIES.md", plan_docs.queries_md(), tmp_path)
 
 
-def test_scale_md_is_current(plan_docs, batch_plans, tmp_path):
-    _assert_current("SCALE.md", plan_docs.scale_md(batch_plans), tmp_path)
+def test_scale_md_is_current(plan_docs, batch_plans, query_results, tmp_path):
+    actions = {name: query_results[name].build_actions for name in batch_plans}
+    _assert_current("SCALE.md", plan_docs.scale_md(batch_plans, actions), tmp_path)
 
 
 def test_plans_md_is_current(plan_docs, query_results, spark, sf_dir, tmp_path):

@@ -17,6 +17,12 @@ SCALE.md columns:
 - bcast:    broadcast exchanges (small-side dims)
 - aggs:     HashAggregate/ObjectHashAggregate count (SortAggregate
   is banned registry-wide by tests/test_plans.py)
+- build actions: Spark actions the query function runs before it
+  returns its DataFrame (eager checkpoints, driver-side collects,
+  convergence counts), counted from the jobs of the build's job group
+  with every table schema already learned. Actions, not jobs: adaptive
+  execution may split one action into a number of jobs that depends on
+  stage timing
 
 Beyond the table, two enumerated-and-justified sections: plans with
 >= HIGH_SHUFFLE shuffles, and plans containing a single-partition
@@ -343,10 +349,10 @@ def queries_md() -> str:
     return "\n".join(out)
 
 
-def scale_md(executed_plans: dict[str, str]) -> str:
+def scale_md(executed_plans: dict[str, str], build_actions: dict[str, int]) -> str:
     """SCALE.md: the plan-shape table of every batch query, from its
-    executed plan, plus the justified high-shuffle and global-window
-    rows."""
+    executed plan and its build-action count, plus the justified
+    high-shuffle and global-window rows."""
     from arcon_spark.plans.registry import REGISTRY
 
     rows = []
@@ -360,6 +366,7 @@ def scale_md(executed_plans: dict[str, str]) -> str:
                 "yes" if any(op in plan for op in _PYTHON_OPS) else "",
                 n_bc,
                 plan.count("HashAggregate") + plan.count("ObjectHashAggregate"),
+                build_actions[name],
                 ", ".join(REGISTRY[name].tags[:3]),
                 _global_window_count(plan),
             )
@@ -375,12 +382,15 @@ def scale_md(executed_plans: dict[str, str]) -> str:
         "cluster. SortAggregate, cartesian products and un-allowlisted",
         "broadcast-nested-loop joins are banned registry-wide by",
         "tests/test_plans.py; Python stages are deliberate (Arrow-batched",
-        "multimodal/ANN featurizers), never incidental.",
+        "multimodal/ANN featurizers), never incidental. `build actions`",
+        "counts the Spark actions (eager checkpoints, collects, counts) a",
+        "query runs while building its DataFrame; a change to a count needs",
+        "a doc update here.",
         "",
-        "| query | shuffles | scans | python | bcast | aggs | tags |",
-        "|---|---|---|---|---|---|---|",
+        "| query | shuffles | scans | python | bcast | aggs | build actions | tags |",
+        "|---|---|---|---|---|---|---|---|",
     ]
-    out += ["| " + " | ".join(str(c) for c in r[:7]) + " |" for r in rows]
+    out += ["| " + " | ".join(str(c) for c in r[:8]) + " |" for r in rows]
     n_zero = sum(1 for r in rows if r[1] == 0)
     n_py = sum(1 for r in rows if r[3])
     out += [
@@ -395,7 +405,7 @@ def scale_md(executed_plans: dict[str, str]) -> str:
         for r in high:
             note = HIGH_SHUFFLE_NOTES.get(r[0], "UNEXPLAINED — trim the plan or add a note")
             out.append(f"- **{r[0]}** ({r[1]} shuffles): {note}")
-    gw_rows = [r for r in rows if r[7] > 0]
+    gw_rows = [r for r in rows if r[8] > 0]
     if gw_rows:
         out += [
             "",
@@ -412,7 +422,7 @@ def scale_md(executed_plans: dict[str, str]) -> str:
         ]
         for r in gw_rows:
             note = GLOBAL_WINDOW_NOTES.get(r[0], "UNEXPLAINED — repartition the window or add a note")
-            out.append(f"- **{r[0]}** ({r[7]} global window{'s' if r[7] > 1 else ''}): {note}")
+            out.append(f"- **{r[0]}** ({r[8]} global window{'s' if r[8] > 1 else ''}): {note}")
     return "\n".join(out) + "\n"
 
 
